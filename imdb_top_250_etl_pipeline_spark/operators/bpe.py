@@ -9,43 +9,86 @@ the DISTINCT-WORD table weighted by word frequency — corpus size only
 matters once (the word count), after which each merge round's cost is
 bounded by vocabulary size, not corpus size.
 
-Spark-first shape, NO driver-side collect anywhere (the engine's
-no-collect rule): each round's argmax pair is a one-row DataFrame
-(TakeOrdered with a deterministic freq-desc/lexicographic tie-break)
-that CROSS-JOINS back as a broadcast, and the merge itself is a per-row
-``aggregate`` fold over the symbol array comparing against the
-broadcast pair columns — so the full k-round trainer is one lazy plan
-per round with a localCheckpoint pin between rounds (the
-kmeans_refine/pagerank iteration discipline).
+Spark-first shape: the word count is a distributed aggregation; the
+merge loop is sequential (each round's argmax depends on the previous
+rewrite), so, as the standard trainers do, it runs in ONE process — a
+single ``mapInPandas`` task over the distinct-word table.  The trainer
+is one lazy plan: building it runs no job and takes no pin.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from collections import Counter
+from collections.abc import Iterator
 
-from .pinning import eager_pin, pin
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 END_MARK = "▁"  # word-end sentinel (SentencePiece's marker)
 
 
+def _symbols(word: Column) -> Column:
+    """A word's initial symbols: its characters, with the end-marker
+    appended to the last (the one symbolization rule, shared by the
+    trainer and the segmenter)."""
+    chars = F.split(word, "")
+    n = F.size(chars)
+    # 1-char words: slice(1, 0) is empty, element_at(-1) is the char
+    return F.concat(
+        F.slice(chars, 1, n - 1),
+        F.array(F.concat(F.element_at(chars, -1), F.lit(END_MARK))),
+    )
+
+
 def _word_symbols(df: DataFrame, text_col: str) -> DataFrame:
-    """(symbols: array<string>, freq: long) — one row per DISTINCT word,
-    symbols = characters with the end-marker appended to the last."""
+    """(symbols: array<string>, freq: long) — one row per DISTINCT word."""
     words = (
         df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
         .where(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count("*").cast("long").alias("freq"))
     )
-    chars = F.split(F.col("w"), "")
-    n = F.size(chars)
-    symbols = F.concat(
-        F.slice(chars, 1, n - 1),
-        F.array(F.concat(F.element_at(chars, -1), F.lit(END_MARK))),
-    )
-    # 1-char words: slice(1, 0) is empty, element_at(-1) is the char
-    return words.select(symbols.alias("symbols"), "freq")
+    return words.select(_symbols(F.col("w")).alias("symbols"), "freq")
+
+
+def _merge_word(symbols: tuple, left: str, right: str) -> tuple:
+    """``_merge_expr`` on one word: left-to-right, non-overlapping."""
+    out: list[str] = []
+    for s in symbols:
+        if out and out[-1] == left and s == right:
+            out[-1] = left + right
+        else:
+            out.append(s)
+    return tuple(out)
+
+
+def _train_merges(
+    vocab: list[tuple[tuple, int]], n_merges: int
+) -> list[tuple[int, str, str, int]]:
+    """The exact k-round trainer over a (symbols, freq) word table.
+
+    Each round recounts the frequency-weighted adjacent pairs, drops
+    pairs with freq < 2 and takes the max by (freq DESC, left ASC,
+    right ASC).
+    Python compares strings by code point, which for valid UTF-8 is
+    the same order as Spark's byte-wise string compare, so the
+    tie-break agrees with the engine's ORDER BY.
+    """
+    merges = []
+    for rank in range(n_merges):
+        pairs: Counter = Counter()
+        for syms, freq in vocab:
+            for pair in zip(syms, syms[1:]):
+                pairs[pair] += freq
+        best = min(
+            ((-f, p) for p, f in pairs.items() if f >= 2), default=None
+        )
+        if best is None:
+            break
+        neg_freq, (left, right) = best
+        merges.append((rank, left, right, -neg_freq))
+        vocab = [(_merge_word(s, left, right), f) for s, f in vocab]
+    return merges
 
 
 def _merge_expr(pa, pb):
@@ -71,86 +114,42 @@ def _merge_expr(pa, pb):
     )
 
 
-def bpe_train(
-    df: DataFrame,
-    text_col: str,
-    n_merges: int,
-    checkpoint_every: int = 4,
-) -> DataFrame:
+def bpe_train(df: DataFrame, text_col: str, n_merges: int) -> DataFrame:
     """Learn ``n_merges`` BPE merges → (rank, left, right, freq): the
     rank-ordered merge table (the tokenizer artifact).
+
+    The distinct-word table is counted in Spark at corpus parallelism;
+    the merge loop then runs in one Python worker over that table
+    (``coalesce(1).mapInPandas``), so its memory and time are bounded
+    by the distinct-word count, not the corpus.  The result is lazy:
+    building it runs no Spark job and takes no pin.
 
     Determinism: each round's winning pair is the max by (freq DESC,
     left ASC, right ASC) — the lexicographic tie-break makes the whole
     merge sequence reproducible across partitionings and engines, which
-    the python-dual test pins exactly.  Rounds whose best pair has
-    freq < 2 stop contributing (a pair occurring once is never worth a
-    merge; the reference trainer's stopping rule).
+    the python-dual test pins exactly.  Training stops at the first
+    round whose best pair has freq < 2 (a pair occurring once is never
+    worth a merge; the reference trainer's stopping rule).
     """
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
-    spark = df.sparkSession
-    vocab, vocab_pin = pin(_word_symbols(df, text_col))
-    merges: DataFrame | None = None
-    for rank in range(n_merges):
-        pairs = (
-            vocab.select(
-                F.posexplode(
-                    F.slice(F.col("symbols"), 1, F.size("symbols") - 1)
-                ).alias("_i", "left"),
-                F.col("symbols"),
-                F.col("freq"),
-            )
-            .select(
-                "left",
-                F.element_at(F.col("symbols"), F.col("_i") + 2).alias(
-                    "right"
-                ),
-                "freq",
-            )
-            .groupBy("left", "right")
-            .agg(F.sum("freq").alias("pair_freq"))
-            .where(F.col("pair_freq") >= 2)
+
+    def train(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        vocab = [
+            (tuple(syms), int(freq))
+            for pdf in batches
+            for syms, freq in zip(pdf["symbols"], pdf["freq"])
+        ]
+        yield pd.DataFrame(
+            _train_merges(vocab, n_merges),
+            columns=["rank", "left", "right", "freq"],
         )
-        best = (
-            pairs.orderBy(
-                F.desc("pair_freq"), F.asc("left"), F.asc("right")
-            )
-            .limit(1)
-            .select(
-                F.lit(rank).cast("long").alias("rank"),
-                "left",
-                "right",
-                F.col("pair_freq").alias("freq"),
-            )
-        )
-        # pin the 1-row winner: it feeds BOTH the merge table and the
-        # rewrite, and must not be recomputed against a rewritten vocab.
-        # These pins stay until the ambient pin_scope closes — the
-        # returned merges table is a union over ALL of them.
-        best = eager_pin(best)
-        merges = best if merges is None else merges.unionByName(best)
-        rewrite = _merge_expr(F.col("_pl"), F.col("_pr"))
-        vocab = (
-            vocab.crossJoin(
-                F.broadcast(
-                    best.select(
-                        F.col("left").alias("_pl"),
-                        F.col("right").alias("_pr"),
-                    )
-                )
-            )
-            .select(rewrite(F.col("symbols")).alias("symbols"), "freq")
-        )
-        if (rank + 1) % checkpoint_every == 0 or rank == n_merges - 1:
-            # new vocab checkpoint materialized -> the previous round's
-            # vocab blocks can be freed immediately
-            vocab, handle = pin(vocab)
-            vocab_pin.release()
-            vocab_pin = handle
-    # the final vocab pin is pure scratch (only `merges` is returned)
-    vocab_pin.release()
-    return merges
+
+    return _word_symbols(df, text_col).coalesce(1).mapInPandas(
+        train, "rank long, left string, right string, freq long"
+    )
 
 
 def bpe_segment(
@@ -170,12 +169,7 @@ def bpe_segment(
         id_col,
         F.posexplode(F.split(F.col(text_col), " ")).alias("_pos", "_w"),
     ).where(F.length("_w") > 0)
-    sym_w = F.split(F.col("_w"), "")
-    n_w = F.size(sym_w)
-    expr = F.concat(
-        F.slice(sym_w, 1, n_w - 1),
-        F.array(F.concat(F.element_at(sym_w, -1), F.lit(END_MARK))),
-    )
+    expr = _symbols(F.col("_w"))
     for left, right in merges:
         expr = _merge_expr(F.lit(left), F.lit(right))(expr)
     return (

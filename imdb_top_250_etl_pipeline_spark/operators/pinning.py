@@ -1,8 +1,8 @@
 """Resource lifecycle for eager ``localCheckpoint`` pins.
 
 Several operators in this package (distributed windows' partition-id
-pinning, PageRank / connected-components / k-means / BPE iteration,
-the dedup signature bases) MUST materialize an intermediate eagerly:
+pinning, PageRank / connected-components / k-means iteration, the
+dedup signature bases) MUST materialize an intermediate eagerly:
 either two plan branches have to observe the same physical
 partitioning (``spark_partition_id`` would otherwise disagree across
 a re-sampled range exchange), or an iterative loop's lineage would

@@ -5101,11 +5101,13 @@ UNION ALL SELECT 'closure', '', 6, true
     "text_bpe_merges",
     oracle=_BPE_MERGES_ORACLE,
     doc="Distributed BPE tokenizer training (operators/bpe.py::"
-    "bpe_train): k rounds of corpus-wide pair counting over the "
-    "frequency-weighted DISTINCT-WORD table, each round's argmax pair "
-    "(freq desc, lexicographic tie-break — fully deterministic) "
-    "broadcast back and applied as a per-row aggregate() fold, no "
-    "driver-side collect anywhere.  PROMOTED to an invariant oracle "
+    "bpe_train): the frequency-weighted DISTINCT-WORD table is counted "
+    "corpus-parallel in Spark, then the sequential k-round loop (pair "
+    "recount, argmax with the freq desc/lexicographic tie-break — fully "
+    "deterministic — and a left-to-right merge) runs in one Python "
+    "worker over that table via coalesce(1).mapInPandas; building the "
+    "plan runs no job and takes no pin, and nothing is collected to the "
+    "driver.  PROMOTED to an invariant oracle "
     "(round 10): (part, sym, n, ok) rows where merge_1 is the FIRST "
     "merge pinned EXACTLY by the SQL dual (word-freq table → "
     "end-marked adjacent char pairs → argmax with the same tie-break — "

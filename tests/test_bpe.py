@@ -3,7 +3,10 @@ Sennrich/GPT-2 trainer shape with the same deterministic tie-break)."""
 
 from __future__ import annotations
 
+import uuid
 from collections import Counter
+
+import pytest
 
 from imdb_top_250_etl_pipeline_spark.operators.bpe import (
     END_MARK,
@@ -75,16 +78,51 @@ CORPUS = [
     "a ab abc abc ab a",
 ]
 
+# Non-ASCII ties: every pair below occurs exactly twice, so the
+# (freq desc, left, right) tie-break alone orders the merges.  Byte
+# order z < é < ｡ (U+FF61) < 😀 (U+1F600) on the left, and è < é on the
+# right, is code-point order; UTF-16 order would put 😀 (a surrogate
+# pair) before ｡.  Eight merges are requested, and training stops after
+# six, when the best pair's freq drops below 2.
+CORPUS_UNICODE = [
+    "zé éz 😀a ｡a",
+    "éz zé ｡a 😀a",
+    "bb bb zè zè",
+]
 
-def test_bpe_train_matches_reference_exactly(spark):
+
+@pytest.mark.parametrize(
+    "corpus", [CORPUS, CORPUS_UNICODE], ids=["ascii", "unicode_ties"]
+)
+def test_bpe_train_matches_reference_exactly(spark, corpus):
     df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(CORPUS)], "doc_id long, text string"
+        [(i, t) for i, t in enumerate(corpus)], "doc_id long, text string"
     )
     got = [
         (r["rank"], r["left"], r["right"], r["freq"])
         for r in bpe_train(df, "text", 8).orderBy("rank").collect()
     ]
-    assert got == _ref_train(CORPUS, 8)
+    assert got == _ref_train(corpus, 8)
+
+
+def test_bpe_train_build_runs_no_job(spark):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(CORPUS)], "doc_id long, text string"
+    )
+    group = f"bpe-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "bpe_train plan build")
+    try:
+        merges = bpe_train(df, "text", 8)
+        # a driver-side round loop (pins, probes) would launch jobs here
+        assert list(tracker.getJobIdsForGroup(group)) == []
+        merges.collect()
+        # the group does see jobs: the guard above is not vacuous
+        assert list(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_bpe_train_on_fixture_matches_reference(spark):

@@ -119,10 +119,9 @@ def test_bpe_train_frees_vocab_rounds(spark):
     with pin_scope():
         merges = bpe_train(docs, "text", 4)
         assert merges.count() >= 1
-        # per-round 1-row best pins remain (the result unions them) but
-        # every superseded vocab checkpoint must be gone: <= 4 best
-        # pins + zero live vocab pins (final one is scratch, released)
-        assert len(_ids(spark) - base) <= 4
+        # the merge loop runs inside one Python task over the lazily
+        # counted word table: no round state is ever checkpointed
+        assert _ids(spark) - base == set()
     assert _ids(spark) - base == set()
 
 
