@@ -13,38 +13,138 @@ Constituents stay individually registered in SUBSUMED (see registry):
 tests/test_oracle_parity checks each one against its own oracle, which
 is what localizes a battery failure to a single branch.
 
-Branch projections normalize heterogeneous schemas to a shared column
-list with explicit casts ON BOTH SIDES (Spark select / oracle SELECT),
-because the driver compares schemas and hashes values after sorting
-columns by name.
+Most branches are pure projections of a registered constituent, so a
+battery declares them as a BatterySpec: a slot schema plus one Branch
+row per constituent, each slot mapped to ONE SQL expression that both
+Spark (selectExpr) and DuckDB parse.  From the rows the spec generates
+the Spark union, the DuckDB oracle, the sf1-sweep shard map and the
+branch list of the registry doc; each slot is CAST to its declared
+type on both sides, because the oracle comparison checks schemas and
+hashes values after sorting columns by name.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources import load
-from .registry import ORACLES, QUERIES, register, subsume
-
-# Capture constituent fns + oracle SQL before subsume() detaches them
-# from the driver-facing dicts.
-_FN = {name: q.fn for name, q in QUERIES.items()}
-_SQL = dict(ORACLES)
+from .registry import QueryFn, lookup, register, subsume
 
 
+@dataclass(frozen=True)
+class Branch:
+    """One battery branch: a source projected onto the battery's slots.
+
+    ``src`` is a registered constituent's name, or a hand-written
+    ``(builder, oracle SQL)`` pair for a branch with inline Spark logic.
+    ``cols`` maps slot -> SQL expression over the source's columns; a
+    slot it omits takes the battery default (a typed NULL unless the
+    spec says otherwise).  ``key`` is the part tag; a key ending in "_"
+    names a family whose source emits its own ``part`` column, tagged
+    ``'<key>' || part`` unless ``cols`` sets ``part`` itself.
+    """
+
+    key: str
+    src: str | tuple[QueryFn, str]
+    cols: dict[str, str]
+
+    def source(self) -> tuple[QueryFn, str]:
+        """The (Spark builder, DuckDB SQL) pair this branch projects."""
+        if isinstance(self.src, str):
+            q = lookup(self.src)
+            return q.fn, q.oracle
+        return self.src
+
+
+def branch(key: str, src: str | tuple[QueryFn, str], **cols: str) -> Branch:
+    return Branch(key, src, cols)
+
+
+def _same(*cols: str) -> dict[str, str]:
+    """Slots fed by the source column of the same name."""
+    return {c: c for c in cols}
+
+
+@dataclass(frozen=True)
+class BatterySpec:
+    """A tagged-union battery generated from its branch rows.
+
+    ``schema`` is the output DDL ("part STRING, a BIGINT, ..."), in
+    output order; ``defaults`` maps slot -> SQL expression for slots a
+    branch omits (NULL otherwise).  Branches build and union in row
+    order: some constituents take eager pins while they build.
+    """
+
+    schema: str
+    branches: tuple[Branch, ...]
+    defaults: dict[str, str] = field(default_factory=dict)
+
+    def slots(self) -> list[tuple[str, str]]:
+        return [tuple(s.split()) for s in self.schema.split(",")]
+
+    def exprs(self, b: Branch) -> dict[str, str]:
+        """Slot -> the branch's (uncast) SQL expression, in Spark SQL."""
+        tag = f"'{b.key}' || part" if b.key.endswith("_") else f"'{b.key}'"
+        cols = {"part": tag, **self.defaults, **b.cols}
+        return {slot: cols.get(slot, "NULL") for slot, _ in self.slots()}
+
+    def branch_oracle(self, b: Branch, cast: bool = True) -> str:
+        """The branch's DuckDB SELECT (uncast when ``cast`` is False, for
+        type checks).  Slot expressions are Spark SQL; DuckDB reads them
+        after one name translation."""
+        exprs = self.exprs(b)
+        sel = ", ".join(
+            f"CAST({exprs[slot]} AS {typ}) AS {slot}" if cast
+            else f"{exprs[slot]} AS {slot}"
+            for slot, typ in self.slots()
+        )
+        sel = sel.replace("unix_micros(", "epoch_us(")
+        return f"SELECT {sel} FROM ({b.source()[1]}) t"
+
+    def oracle(self) -> str:
+        return "\nUNION ALL\n".join(self.branch_oracle(b) for b in self.branches)
+
+    def build(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        # a TIMESTAMP slot is the zoned type in Spark whatever
+        # spark.sql.timestampType says (sources/catalog.py discipline)
+        def one(b: Branch) -> DataFrame:
+            exprs = self.exprs(b)
+            return b.source()[0](spark, sf_dir).selectExpr(*(
+                f"CAST({exprs[slot]} AS "
+                f"{'TIMESTAMP_LTZ' if typ == 'TIMESTAMP' else typ}) AS {slot}"
+                for slot, typ in self.slots()
+            ))
+
+        return reduce(DataFrame.unionByName, [one(b) for b in self.branches])
+
+    def parts(self) -> dict[str, str]:
+        """Part tag -> constituent, for branches backed by the registry."""
+        return {b.key: b.src for b in self.branches if isinstance(b.src, str)}
+
+
+# Every spec-generated battery, by registry name (the oracle-parity
+# tests type-check each generated oracle against its schema).
+BATTERY_SPECS: dict[str, BatterySpec] = {}
+
+
+def register_battery(name: str, spec: BatterySpec, doc: str) -> None:
+    """Register ``name`` as the spec's generated Spark union + oracle."""
+    BATTERY_SPECS[name] = spec
+    register(name, oracle=spec.oracle(), doc=doc)(spec.build)
+
+
+# Column helpers for the branches still projected by hand.
 def _tag(t: str) -> Column:
     return F.lit(t).alias("part")
 
 
 def _null(sql_type: str) -> Column:
     return F.lit(None).cast(sql_type)
-
-
-def _wrap(tag: str, cols_sql: str, inner: str) -> str:
-    """Oracle branch: tag + projected columns over a constituent's SQL."""
-    return f"SELECT '{tag}' AS part, {cols_sql} FROM ({inner}) t"
 
 
 # ---------------------------------------------------------------------------
@@ -100,47 +200,132 @@ _PROFILE_ORACLE = "\nUNION ALL\n".join(
 )
 
 
-@register(
+def _exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact countDistinct per priority, beside approx_count_distinct
+    verified AS AN INVARIANT: the HLL++ estimate per l_returnflag must
+    sit within 3*rsd of the exact count, folded to one boolean."""
+    exact = lookup("agg_count_distinct").fn(spark, sf_dir)
+    li = load(spark, sf_dir, "lineitem")
+    flag = (
+        li.groupBy("l_returnflag")
+        .agg(
+            F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx"),
+            F.countDistinct("l_partkey").alias("exact"),
+        )
+        .select(
+            (F.abs(F.col("approx") - F.col("exact")) <= 0.06 * F.col("exact")).alias(
+                "ok"
+            )
+        )
+        .agg(F.min("ok").alias("approx_ok"))
+    )
+    return exact.crossJoin(flag)
+
+
+def _hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mergeable-sketch invariant: per-day HLL sketches unioned across the
+    month must estimate the month's exact distinct users within 5% (the
+    incremental pattern — sketch values are engine-specific, so the
+    oracle pins the exact count and the invariant boolean)."""
+    from ..operators.profiling import incremental_distinct_estimate
+
+    ev = load(spark, sf_dir, "events")
+    est = incremental_distinct_estimate(
+        ev, "user_id", F.to_date("ts")
+    ).select("estimate")
+    return (
+        ev.agg(F.countDistinct("user_id").alias("n_customers"))
+        .crossJoin(F.broadcast(est))
+        .select(
+            "n_customers",
+            (
+                F.abs(F.col("estimate") - F.col("n_customers"))
+                <= 0.05 * F.col("n_customers")
+            ).alias("approx_ok"),
+        )
+    )
+
+
+def _profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.profiling import profile_columns
+
+    return profile_columns(load(spark, sf_dir, "customer"), _PROFILE_COLS)
+
+
+def _quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mergeable quantile summaries (round 9 — the quantile analogue of
+    hll_union): per-day equi-depth grids merged into global p50/p90/p99
+    estimates whose RANK error vs the data must stay within 2/grid,
+    folded to the invariant boolean the oracle pins true."""
+    from ..operators.profiling import merged_quantile_estimate, quantile_state
+
+    GRID = 64
+    evv = load(spark, sf_dir, "events").select(
+        F.to_date("ts").alias("day"), "value"
+    )
+    qst = quantile_state(evv, "value", "day", grid=GRID)
+    qest = merged_quantile_estimate(qst, [0.5, 0.9, 0.99])
+    qrank = (
+        evv.crossJoin(F.broadcast(qest))
+        .groupBy("p")
+        .agg(
+            (
+                F.sum(F.when(F.col("value") <= F.col("est"), 1).otherwise(0))
+                / F.count("*")
+            ).alias("_rank")
+        )
+    )
+    return qrank.select(
+        F.concat(
+            F.lit("p"), F.round(F.col("p") * 100).cast("int").cast("string")
+        ).alias("p"),
+        (F.abs(F.col("_rank") - F.col("p")) <= 2.0 / GRID).alias(
+            "approx_ok"
+        ),
+    )
+
+
+register_battery(
     "agg_distinct_battery",
-    oracle=(
-        _wrap(
-            "exact",
-            "o_orderpriority, n_customers, n_orders, true AS approx_ok, "
-            "CAST(NULL AS VARCHAR) AS min_s, CAST(NULL AS VARCHAR) AS max_s",
-            _SQL["agg_count_distinct"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "histogram",
-            "CAST(bucket AS VARCHAR) AS o_orderpriority, n AS n_customers, "
-            "CAST(NULL AS BIGINT) AS n_orders, true AS approx_ok, "
-            "CAST(NULL AS VARCHAR) AS min_s, CAST(NULL AS VARCHAR) AS max_s",
-            _HISTOGRAM_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "hll_union",
-            "'union' AS o_orderpriority, "
-            "CAST(count(DISTINCT user_id) AS BIGINT) AS n_customers, "
-            "CAST(NULL AS BIGINT) AS n_orders, true AS approx_ok, "
-            "CAST(NULL AS VARCHAR) AS min_s, CAST(NULL AS VARCHAR) AS max_s",
-            "SELECT user_id FROM events",
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "profile",
-            "col_name AS o_orderpriority, n_distinct AS n_customers, "
-            "n_nulls AS n_orders, true AS approx_ok, min_s, max_s",
-            _PROFILE_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "qmerge",
-            "p AS o_orderpriority, CAST(NULL AS BIGINT) AS n_customers, "
-            "CAST(NULL AS BIGINT) AS n_orders, true AS approx_ok, "
-            "CAST(NULL AS VARCHAR) AS min_s, CAST(NULL AS VARCHAR) AS max_s",
-            "SELECT p FROM (VALUES ('p50'), ('p90'), ('p99')) t(p)",
-        )
+    BatterySpec(
+        "part STRING, o_orderpriority STRING, n_customers BIGINT, "
+        "n_orders BIGINT, approx_ok BOOLEAN, min_s STRING, max_s STRING",
+        (
+            branch(
+                "exact",
+                (
+                    _exact_distinct,
+                    "SELECT *, true AS approx_ok FROM ("
+                    + lookup("agg_count_distinct").oracle + ") c",
+                ),
+                **_same("o_orderpriority", "n_customers", "n_orders"),
+            ),
+            branch("histogram", "agg_histogram_fixed_width",
+                   o_orderpriority="bucket", n_customers="n", approx_ok="true"),
+            branch(
+                "hll_union",
+                (
+                    _hll_union,
+                    "SELECT CAST(count(DISTINCT user_id) AS BIGINT) "
+                    "AS n_customers, true AS approx_ok FROM events",
+                ),
+                o_orderpriority="'union'", n_customers="n_customers",
+            ),
+            branch("profile", (_profile, _PROFILE_ORACLE),
+                   o_orderpriority="col_name", n_customers="n_distinct",
+                   n_orders="n_nulls", approx_ok="true",
+                   **_same("min_s", "max_s")),
+            branch(
+                "qmerge",
+                (
+                    _quantile_merge,
+                    "SELECT p, true AS approx_ok "
+                    "FROM (VALUES ('p50'), ('p90'), ('p99')) t(p)",
+                ),
+                o_orderpriority="p",
+            ),
+        ),
+        defaults=_same("approx_ok"),
     ),
     doc="countDistinct (exact, hash-checked) + approx_count_distinct "
     "verified AS AN INVARIANT: the HLL++ estimate per l_returnflag must "
@@ -160,202 +345,46 @@ _PROFILE_ORACLE = "\nUNION ALL\n".join(
     "profiling.py::quantile_state/merged_quantile_estimate). Subsumes "
     "agg_count_distinct, agg_approx_distinct.",
 )
-def agg_distinct_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    exact = _FN["agg_count_distinct"](spark, sf_dir)
-    li = load(spark, sf_dir, "lineitem")
-    flag = (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx"),
-            F.countDistinct("l_partkey").alias("exact"),
-        )
-        .select(
-            (F.abs(F.col("approx") - F.col("exact")) <= 0.06 * F.col("exact")).alias(
-                "ok"
-            )
-        )
-        .agg(F.min("ok").alias("approx_ok"))
-    )
-    no_mm = [_null("string").alias("min_s"), _null("string").alias("max_s")]
-    ex = exact.select(_tag("exact"), "*").crossJoin(flag).select("*", *no_mm)
-    hist = agg_histogram_fixed_width(spark, sf_dir).select(
-        _tag("histogram"),
-        F.col("bucket").cast("string").alias("o_orderpriority"),
-        F.col("n").alias("n_customers"),
-        _null("bigint").alias("n_orders"),
-        F.lit(True).alias("approx_ok"),
-        *no_mm,
-    )
-    # mergeable-sketch invariant: per-day HLL sketches unioned across the
-    # month must estimate the month's exact distinct users within 5%
-    # (the incremental pattern — sketch values are engine-specific, so
-    # the oracle pins the exact count and the invariant boolean)
-    from ..operators.profiling import incremental_distinct_estimate
-
-    ev = load(spark, sf_dir, "events")
-    est = incremental_distinct_estimate(
-        ev, "user_id", F.to_date("ts")
-    ).select("estimate")
-    hll = (
-        ev.agg(F.countDistinct("user_id").alias("n_customers"))
-        .crossJoin(F.broadcast(est))
-        .select(
-            _tag("hll_union"),
-            F.lit("union").alias("o_orderpriority"),
-            "n_customers",
-            _null("bigint").alias("n_orders"),
-            (
-                F.abs(F.col("estimate") - F.col("n_customers"))
-                <= 0.05 * F.col("n_customers")
-            ).alias("approx_ok"),
-            *no_mm,
-        )
-    )
-    from ..operators.profiling import profile_columns
-
-    prof = profile_columns(
-        load(spark, sf_dir, "customer"), _PROFILE_COLS
-    ).select(
-        _tag("profile"),
-        F.col("col_name").alias("o_orderpriority"),
-        F.col("n_distinct").alias("n_customers"),
-        F.col("n_nulls").alias("n_orders"),
-        F.lit(True).alias("approx_ok"),
-        "min_s",
-        "max_s",
-    )
-    # mergeable quantile summaries (round 9 — the quantile analogue of
-    # hll_union): per-day equi-depth grids merged into global p50/p90/
-    # p99 estimates whose RANK error vs the data must stay within
-    # 2/grid, folded to the invariant boolean the oracle pins true
-    from ..operators.profiling import merged_quantile_estimate, quantile_state
-
-    GRID = 64
-    evv = ev.select(F.to_date("ts").alias("day"), "value")
-    qst = quantile_state(evv, "value", "day", grid=GRID)
-    qest = merged_quantile_estimate(qst, [0.5, 0.9, 0.99])
-    qrank = (
-        evv.crossJoin(F.broadcast(qest))
-        .groupBy("p")
-        .agg(
-            (
-                F.sum(F.when(F.col("value") <= F.col("est"), 1).otherwise(0))
-                / F.count("*")
-            ).alias("_rank")
-        )
-    )
-    qm = qrank.select(
-        _tag("qmerge"),
-        F.concat(
-            F.lit("p"), F.round(F.col("p") * 100).cast("int").cast("string")
-        ).alias("o_orderpriority"),
-        _null("bigint").alias("n_customers"),
-        _null("bigint").alias("n_orders"),
-        (F.abs(F.col("_rank") - F.col("p")) <= 2.0 / GRID).alias(
-            "approx_ok"
-        ),
-        *no_mm,
-    )
-    return (
-        ex.unionByName(hist)
-        .unionByName(hll)
-        .unionByName(prof)
-        .unionByName(qm)
-    )
 
 
-@register(
+register_battery(
     "agg_grouping_battery",
-    oracle=(
-        _wrap(
-            "rollup",
-            "n_name AS k1, o_orderpriority AS k2, n_orders, total, "
-            "g_nation AS g1, g_prio AS g2",
-            _SQL["agg_rollup"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "cube",
-            "l_returnflag AS k1, l_linestatus AS k2, CAST(NULL AS BIGINT) "
-            "AS n_orders, sum_qty AS total, g_rf AS g1, g_ls AS g2",
-            _SQL["agg_cube"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "gsets",
-            "n_name AS k1, o_orderpriority AS k2, n_orders, "
-            "CAST(NULL AS DOUBLE) AS total, g_nation AS g1, g_prio AS g2",
-            _SQL["sql_grouping_sets"],
-        )
+    BatterySpec(
+        "part STRING, k1 STRING, k2 STRING, n_orders BIGINT, total DOUBLE, "
+        "g1 INTEGER, g2 INTEGER",
+        (
+            branch("rollup", "agg_rollup", k1="n_name", k2="o_orderpriority",
+                   n_orders="n_orders", total="total", g1="g_nation",
+                   g2="g_prio"),
+            branch("cube", "agg_cube", k1="l_returnflag", k2="l_linestatus",
+                   total="sum_qty", g1="g_rf", g2="g_ls"),
+            branch("gsets", "sql_grouping_sets", k1="n_name",
+                   k2="o_orderpriority", n_orders="n_orders", g1="g_nation",
+                   g2="g_prio"),
+        ),
     ),
     doc="ROLLUP + CUBE + GROUPING SETS (the spark.sql path) in one tagged "
     "union. Subsumes agg_rollup, agg_cube, sql_grouping_sets.",
 )
-def agg_grouping_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _FN["agg_rollup"](spark, sf_dir).select(
-        _tag("rollup"),
-        F.col("n_name").alias("k1"),
-        F.col("o_orderpriority").alias("k2"),
-        "n_orders",
-        "total",
-        F.col("g_nation").alias("g1"),
-        F.col("g_prio").alias("g2"),
-    )
-    c = _FN["agg_cube"](spark, sf_dir).select(
-        _tag("cube"),
-        F.col("l_returnflag").alias("k1"),
-        F.col("l_linestatus").alias("k2"),
-        _null("bigint").alias("n_orders"),
-        F.col("sum_qty").alias("total"),
-        F.col("g_rf").alias("g1"),
-        F.col("g_ls").alias("g2"),
-    )
-    g = _FN["sql_grouping_sets"](spark, sf_dir).select(
-        _tag("gsets"),
-        F.col("n_name").alias("k1"),
-        F.col("o_orderpriority").alias("k2"),
-        "n_orders",
-        _null("double").alias("total"),
-        F.col("g_nation").alias("g1"),
-        F.col("g_prio").alias("g2"),
-    )
-    return r.unionByName(c).unionByName(g)
 
 
-@register(
+register_battery(
     "agg_stats_battery",
-    oracle=(
-        _wrap(
-            "moments",
-            "l_returnflag AS k, CAST(n AS DOUBLE) AS v1, qty_stddev AS v2, "
-            "qty_var AS v3, qty_skew AS v4, qty_kurt AS v5, "
-            "price_qty_corr AS v6",
-            _SQL["agg_stats_moments"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "percentiles",
-            "o_orderpriority AS k, p50 AS v1, p90 AS v2, p99 AS v3, "
-            "CAST(approx_ok AS DOUBLE) AS v4, CAST(NULL AS DOUBLE) AS v5, "
-            "CAST(NULL AS DOUBLE) AS v6",
-            _SQL["agg_percentiles"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "psi",
-            "bucket AS k, p_ref AS v1, p_cur AS v2, contrib AS v3, "
-            "psi AS v4, CAST(NULL AS DOUBLE) AS v5, "
-            "CAST(NULL AS DOUBLE) AS v6",
-            _SQL["agg_psi_drift"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "mad",
-            "o_orderpriority AS k, median AS v1, mad AS v2, "
-            "CAST(n_outliers AS DOUBLE) AS v3, outlier_frac AS v4, "
-            "CAST(NULL AS DOUBLE) AS v5, CAST(NULL AS DOUBLE) AS v6",
-            _SQL["agg_mad_outliers"],
-        )
+    BatterySpec(
+        "part STRING, k STRING, v1 DOUBLE, v2 DOUBLE, v3 DOUBLE, v4 DOUBLE, "
+        "v5 DOUBLE, v6 DOUBLE",
+        (
+            branch("moments", "agg_stats_moments", k="l_returnflag", v1="n",
+                   v2="qty_stddev", v3="qty_var", v4="qty_skew",
+                   v5="qty_kurt", v6="price_qty_corr"),
+            branch("percentiles", "agg_percentiles", k="o_orderpriority",
+                   v1="p50", v2="p90", v3="p99", v4="approx_ok"),
+            branch("psi", "agg_psi_drift", k="bucket", v1="p_ref",
+                   v2="p_cur", v3="contrib", v4="psi"),
+            branch("mad", "agg_mad_outliers", k="o_orderpriority",
+                   v1="median", v2="mad", v3="n_outliers",
+                   v4="outlier_frac"),
+        ),
     ),
     doc="Statistical moments (stddev/var/skew/kurt/corr per returnflag) + "
     "exact percentiles per priority with the approx_percentile sketch "
@@ -370,48 +399,6 @@ def agg_grouping_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_stats.py. Subsumes agg_stats_moments, agg_percentiles, "
     "agg_psi_drift, agg_mad_outliers.",
 )
-def agg_stats_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = _FN["agg_stats_moments"](spark, sf_dir).select(
-        _tag("moments"),
-        F.col("l_returnflag").alias("k"),
-        F.col("n").cast("double").alias("v1"),
-        F.col("qty_stddev").alias("v2"),
-        F.col("qty_var").alias("v3"),
-        F.col("qty_skew").alias("v4"),
-        F.col("qty_kurt").alias("v5"),
-        F.col("price_qty_corr").alias("v6"),
-    )
-    p = _FN["agg_percentiles"](spark, sf_dir).select(
-        _tag("percentiles"),
-        F.col("o_orderpriority").alias("k"),
-        F.col("p50").alias("v1"),
-        F.col("p90").alias("v2"),
-        F.col("p99").alias("v3"),
-        F.col("approx_ok").cast("double").alias("v4"),
-        _null("double").alias("v5"),
-        _null("double").alias("v6"),
-    )
-    d = _FN["agg_psi_drift"](spark, sf_dir).select(
-        _tag("psi"),
-        F.col("bucket").alias("k"),
-        F.col("p_ref").alias("v1"),
-        F.col("p_cur").alias("v2"),
-        F.col("contrib").alias("v3"),
-        F.col("psi").alias("v4"),
-        _null("double").alias("v5"),
-        _null("double").alias("v6"),
-    )
-    md = _FN["agg_mad_outliers"](spark, sf_dir).select(
-        _tag("mad"),
-        F.col("o_orderpriority").alias("k"),
-        F.col("median").alias("v1"),
-        F.col("mad").alias("v2"),
-        F.col("n_outliers").cast("double").alias("v3"),
-        F.col("outlier_frac").alias("v4"),
-        _null("double").alias("v5"),
-        _null("double").alias("v6"),
-    )
-    return m.unionByName(p).unionByName(d).unionByName(md)
 
 
 # ---------------------------------------------------------------------------
@@ -419,103 +406,51 @@ def agg_stats_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+register_battery(
     "join_semi_anti",
-    oracle=(
-        _wrap("semi", "c_custkey, c_name", _SQL["join_semi"])
-        + "\nUNION ALL\n"
-        + _wrap("anti", "c_custkey, c_name", _SQL["join_anti"])
+    BatterySpec(
+        "part STRING, c_custkey BIGINT, c_name STRING",
+        (branch("semi", "join_semi"), branch("anti", "join_anti")),
+        defaults=_same("c_custkey", "c_name"),
     ),
     doc="Left-semi (EXISTS) + left-anti (NOT EXISTS) membership joins, "
     "tagged. Subsumes join_semi, join_anti.",
 )
-def join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _FN["join_semi"](spark, sf_dir).select(_tag("semi"), "c_custkey", "c_name")
-    a = _FN["join_anti"](spark, sf_dir).select(_tag("anti"), "c_custkey", "c_name")
-    return s.unionByName(a)
 
 
-@register(
+register_battery(
     "join_outer_battery",
-    oracle=(
-        _wrap(
-            "right",
-            "c_custkey AS k1, o_orderkey AS k2, c_mktsegment AS s1",
-            _SQL["join_right"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "full",
-            "custkey AS k1, CAST(NULL AS BIGINT) AS k2, "
-            "CAST(has_open_order AS VARCHAR) || '|' || "
-            "CAST(is_rich AS VARCHAR) AS s1",
-            _SQL["join_full_outer"],
-        )
+    BatterySpec(
+        "part STRING, k1 BIGINT, k2 BIGINT, s1 STRING",
+        (
+            branch("right", "join_right", k1="c_custkey", k2="o_orderkey",
+                   s1="c_mktsegment"),
+            branch("full", "join_full_outer", k1="custkey",
+                   s1="CAST(has_open_order AS STRING) || '|' || "
+                   "CAST(is_rich AS STRING)"),
+        ),
     ),
     doc="Right outer + full outer (MERGE core) joins, tagged and "
     "normalized. Subsumes join_right, join_full_outer.",
 )
-def join_outer_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _FN["join_right"](spark, sf_dir).select(
-        _tag("right"),
-        F.col("c_custkey").alias("k1"),
-        F.col("o_orderkey").alias("k2"),
-        F.col("c_mktsegment").alias("s1"),
-    )
-    f = _FN["join_full_outer"](spark, sf_dir).select(
-        _tag("full"),
-        F.col("custkey").alias("k1"),
-        _null("bigint").alias("k2"),
-        F.concat(
-            F.col("has_open_order").cast("string"),
-            F.lit("|"),
-            F.col("is_rich").cast("string"),
-        ).alias("s1"),
-    )
-    return r.unionByName(f)
 
 
-@register(
+register_battery(
     "join_misc_battery",
-    oracle=(
-        _wrap(
-            "cross",
-            "CAST(NULL AS BIGINT) AS k, r_name AS a, n_name AS b",
-            _SQL["join_cross"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap("zip", "pos AS k, r_name AS a, n_name AS b", _SQL["join_zip_positional"])
-        + "\nUNION ALL\n"
-        + _wrap(
-            "range",
-            "p_partkey AS k, CAST(p_size AS VARCHAR) AS a, bucket_name AS b",
-            _SQL["join_range_theta"],
-        )
+    BatterySpec(
+        "part STRING, k BIGINT, a STRING, b STRING",
+        (
+            branch("cross", "join_cross", a="r_name", b="n_name"),
+            branch("zip", "join_zip_positional", k="pos", a="r_name",
+                   b="n_name"),
+            branch("range", "join_range_theta", k="p_partkey", a="p_size",
+                   b="bucket_name"),
+        ),
     ),
     doc="Cross join + positional zip pairing (J4) + theta/range banding "
     "join, tagged and normalized. Subsumes join_cross, "
     "join_zip_positional, join_range_theta.",
 )
-def join_misc_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _FN["join_cross"](spark, sf_dir).select(
-        _tag("cross"),
-        _null("bigint").alias("k"),
-        F.col("r_name").alias("a"),
-        F.col("n_name").alias("b"),
-    )
-    z = _FN["join_zip_positional"](spark, sf_dir).select(
-        _tag("zip"),
-        F.col("pos").alias("k"),
-        F.col("r_name").alias("a"),
-        F.col("n_name").alias("b"),
-    )
-    r = _FN["join_range_theta"](spark, sf_dir).select(
-        _tag("range"),
-        F.col("p_partkey").alias("k"),
-        F.col("p_size").cast("string").alias("a"),
-        F.col("bucket_name").alias("b"),
-    )
-    return c.unionByName(z).unionByName(r)
 
 
 # ---------------------------------------------------------------------------
@@ -523,80 +458,55 @@ def join_misc_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+register_battery(
     "filter_null_battery",
-    oracle=(
-        _wrap(
-            "nulls",
-            "event_id AS k1, CAST(NULL AS BIGINT) AS k2, "
-            "CAST(NULL AS BIGINT) AS k3, CAST(NULL AS BIGINT) AS k4, "
-            "value AS v1, value_filled AS v2, value_missing AS flag",
-            _SQL["filter_null_handling"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "drop",
-            "l_orderkey AS k1, CAST(l_linenumber AS BIGINT) AS k2, "
-            "l_partkey AS k3, l_suppkey AS k4, "
-            "CAST(l_quantity AS DOUBLE) AS v1, CAST(NULL AS DOUBLE) AS v2, "
-            "CAST(NULL AS BOOLEAN) AS flag",
-            _SQL["column_drop"],
-        )
+    BatterySpec(
+        "part STRING, k1 BIGINT, k2 BIGINT, k3 BIGINT, k4 BIGINT, "
+        "v1 DOUBLE, v2 DOUBLE, flag BOOLEAN",
+        (
+            branch("nulls", "filter_null_handling", k1="event_id",
+                   v1="value", v2="value_filled", flag="value_missing"),
+            branch("drop", "column_drop", k1="l_orderkey", k2="l_linenumber",
+                   k3="l_partkey", k4="l_suppkey", v1="l_quantity"),
+        ),
     ),
     doc="Null predicates/coalesce fill (P5/P7) + column drop with pruning "
     "(P3), tagged and normalized. Subsumes filter_null_handling, "
     "column_drop.",
 )
-def filter_null_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = _FN["filter_null_handling"](spark, sf_dir).select(
-        _tag("nulls"),
-        F.col("event_id").alias("k1"),
-        _null("bigint").alias("k2"),
-        _null("bigint").alias("k3"),
-        _null("bigint").alias("k4"),
-        F.col("value").alias("v1"),
-        F.col("value_filled").alias("v2"),
-        F.col("value_missing").alias("flag"),
-    )
-    d = _FN["column_drop"](spark, sf_dir).select(
-        _tag("drop"),
-        F.col("l_orderkey").alias("k1"),
-        F.col("l_linenumber").cast("bigint").alias("k2"),
-        F.col("l_partkey").alias("k3"),
-        F.col("l_suppkey").alias("k4"),
-        F.col("l_quantity").cast("double").alias("v1"),
-        _null("double").alias("v2"),
-        _null("boolean").alias("flag"),
-    )
-    return n.unionByName(d)
 
 
-@register(
+def _set_all(op: str) -> tuple[QueryFn, str]:
+    """Bag INTERSECT/EXCEPT ALL over naturally-duplicated custkeys."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        o = load(spark, sf_dir, "orders")
+        a3, a2 = (
+            o.where(F.col("o_orderkey") % m == 0).select(
+                F.col("o_custkey").alias("custkey")
+            )
+            for m in (3, 2)
+        )
+        return a3.intersectAll(a2) if op == "INTERSECT" else a3.exceptAll(a2)
+
+    return build, (
+        "SELECT o_custkey AS custkey FROM orders WHERE o_orderkey % 3 = 0 "
+        f"{op} ALL SELECT o_custkey FROM orders WHERE o_orderkey % 2 = 0"
+    )
+
+
+register_battery(
     "set_ops_battery",
-    oracle=(
-        _wrap("union", "custkey", _SQL["set_union_distinct"])
-        + "\nUNION ALL\n"
-        + _wrap("intersect", "custkey", _SQL["set_intersect"])
-        + "\nUNION ALL\n"
-        + _wrap("except", "custkey", _SQL["set_except"])
-        + "\nUNION ALL\n"
-        + _wrap(
-            "intersect_all",
-            "custkey",
-            "SELECT o_custkey AS custkey FROM orders "
-            "WHERE o_orderkey % 3 = 0 "
-            "INTERSECT ALL "
-            "SELECT o_custkey FROM orders WHERE o_orderkey % 2 = 0",
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "except_all",
-            "custkey",
-            "SELECT o_custkey AS custkey FROM orders "
-            "WHERE o_orderkey % 3 = 0 "
-            "EXCEPT ALL "
-            "SELECT o_custkey FROM orders WHERE o_orderkey % 2 = 0",
-        )
+    BatterySpec(
+        "part STRING, custkey BIGINT",
+        (
+            branch("union", "set_union_distinct"),
+            branch("intersect", "set_intersect"),
+            branch("except", "set_except"),
+            branch("intersect_all", _set_all("INTERSECT")),
+            branch("except_all", _set_all("EXCEPT")),
+        ),
+        defaults=_same("custkey"),
     ),
     doc="UNION DISTINCT (A1) + INTERSECT + EXCEPT, plus — round 9 — "
     "the ALL (multiset) variants over naturally-duplicated custkeys "
@@ -608,25 +518,6 @@ def filter_null_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "MULTIPLICITIES, which is the whole point of the ALL branches. "
     "Subsumes set_union_distinct, set_intersect, set_except.",
 )
-def set_ops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    u = _FN["set_union_distinct"](spark, sf_dir).select(_tag("union"), "custkey")
-    i = _FN["set_intersect"](spark, sf_dir).select(_tag("intersect"), "custkey")
-    e = _FN["set_except"](spark, sf_dir).select(_tag("except"), "custkey")
-    o = load(spark, sf_dir, "orders")
-    a3 = o.where(F.col("o_orderkey") % 3 == 0).select(
-        F.col("o_custkey").alias("custkey")
-    )
-    a2 = o.where(F.col("o_orderkey") % 2 == 0).select(
-        F.col("o_custkey").alias("custkey")
-    )
-    ia = a3.intersectAll(a2).select(_tag("intersect_all"), "custkey")
-    ea = a3.exceptAll(a2).select(_tag("except_all"), "custkey")
-    return (
-        u.unionByName(i)
-        .unionByName(e)
-        .unionByName(ia)
-        .unionByName(ea)
-    )
 
 
 _WINDOW_NAV_SQL = """
@@ -681,12 +572,6 @@ _WINDOW_QBIN_SQL = """
            END AS running_value
     FROM events, edges
 """
-
-_WINDOW_AUX = (
-    "CAST(NULL AS VARCHAR) AS prev_type, CAST(NULL AS VARCHAR) AS next_type, "
-    "CAST(NULL AS BIGINT) AS secs_since_prev"
-)
-
 
 def _events_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "events").select(
@@ -834,45 +719,45 @@ def scalar_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+def _window_nav(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frame-spec running sum + lag/lead over one (user_id, ts) window."""
+    from pyspark.sql.window import Window as W
+
+    from ..functions.numeric import money
+
+    e = load(spark, sf_dir, "events")
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    prev_ts = F.lag("ts").over(w)
+    return e.select(
+        "user_id",
+        "event_id",
+        "ts",
+        F.sum(money("value")).over(run).cast("double").alias("running_value"),
+        F.lag("event_type").over(w).alias("prev_type"),
+        F.lead("event_type").over(w).alias("next_type"),
+        (F.unix_timestamp("ts") - F.unix_timestamp(prev_ts)).alias(
+            "secs_since_prev"
+        ),
+    )
+
+
+register_battery(
     "window_events_battery",
-    oracle=(
-        _wrap(
-            "nav",
-            "user_id, event_id, ts, running_value, prev_type, next_type, "
-            "secs_since_prev",
-            _WINDOW_NAV_SQL,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "rn",
-            f"user_id, event_id, ts, running_value, {_WINDOW_AUX}",
-            _WINDOW_RN_SQL,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "cumsum",
-            f"user_id, event_id, ts, running_value, {_WINDOW_AUX}",
-            _WINDOW_CUMSUM_SQL,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "rdist",
-            f"user_id, event_id, ts, running_value, {_WINDOW_AUX}",
-            _WINDOW_RDIST_SQL,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "qbin",
-            f"user_id, event_id, ts, running_value, {_WINDOW_AUX}",
-            _WINDOW_QBIN_SQL,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "zorder",
-            f"user_id, event_id, ts, running_value, {_WINDOW_AUX}",
-            _ZORDER_ORACLE,
-        )
+    BatterySpec(
+        "part STRING, user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
+        "running_value DOUBLE, prev_type STRING, next_type STRING, "
+        "secs_since_prev BIGINT",
+        (
+            branch("nav", (_window_nav, _WINDOW_NAV_SQL),
+                   **_same("prev_type", "next_type", "secs_since_prev")),
+            branch("rn", "window_grouped_row_number"),
+            branch("cumsum", "window_distributed_cumsum"),
+            branch("rdist", "window_running_distinct"),
+            branch("qbin", "window_quantile_bins"),
+            branch("zorder", "scalar_zorder_key"),
+        ),
+        defaults=_same("user_id", "event_id", "ts", "running_value"),
     ),
     doc="Frame-spec running sum + lag/lead navigation over the SAME "
     "(user_id, ts) window (part=nav), PLUS the three distributed window "
@@ -892,45 +777,6 @@ def scalar_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     "arithmetic). Subsumes window_running_sum, window_lag_lead, "
     "window_running_distinct.",
 )
-def window_events_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    from ..functions.numeric import money
-
-    e = load(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    prev_ts = F.lag("ts").over(w)
-    nav = e.select(
-        _tag("nav"),
-        "user_id",
-        "event_id",
-        "ts",
-        F.sum(money("value")).over(run).cast("double").alias("running_value"),
-        F.lag("event_type").over(w).alias("prev_type"),
-        F.lead("event_type").over(w).alias("next_type"),
-        (F.unix_timestamp("ts") - F.unix_timestamp(prev_ts)).alias(
-            "secs_since_prev"
-        ),
-    )
-
-    aux = [
-        _null("string").alias("prev_type"),
-        _null("string").alias("next_type"),
-        _null("bigint").alias("secs_since_prev"),
-    ]
-    rn = window_grouped_row_number(spark, sf_dir).select(_tag("rn"), "*", *aux)
-    cs = window_distributed_cumsum(spark, sf_dir).select(_tag("cumsum"), "*", *aux)
-    rd = window_running_distinct(spark, sf_dir).select(_tag("rdist"), "*", *aux)
-    qb = window_quantile_bins(spark, sf_dir).select(_tag("qbin"), "*", *aux)
-    zo = scalar_zorder_key(spark, sf_dir).select(_tag("zorder"), "*", *aux)
-    return (
-        nav.unionByName(rn)
-        .unionByName(cs)
-        .unionByName(rd)
-        .unionByName(qb)
-        .unionByName(zo)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -938,31 +784,22 @@ def window_events_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+register_battery(
     "etl_bridges",
-    oracle=(
-        _wrap("star", "movie_id, person_id", _SQL["etl_bridge_star"])
-        + "\nUNION ALL\n"
-        + _wrap("director", "movie_id, person_id", _SQL["etl_bridge_director"])
-        + "\nUNION ALL\n"
-        + _wrap("writer", "movie_id, person_id", _SQL["etl_bridge_writer"])
+    BatterySpec(
+        "part STRING, movie_id INTEGER, person_id INTEGER",
+        (
+            branch("star", "etl_bridge_star"),
+            branch("director", "etl_bridge_director"),
+            branch("writer", "etl_bridge_writer"),
+        ),
+        defaults=_same("movie_id", "person_id"),
     ),
     doc="All three bridge tables (E2/E3 keyed unnest -> broadcast people "
     "join -> composite-PK dedup; reference webscraper-postgres.py:"
     "239-285), tagged. Subsumes etl_bridge_star, etl_bridge_director, "
     "etl_bridge_writer.",
 )
-def etl_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _FN["etl_bridge_star"](spark, sf_dir).select(
-        _tag("star"), "movie_id", "person_id"
-    )
-    d = _FN["etl_bridge_director"](spark, sf_dir).select(
-        _tag("director"), "movie_id", "person_id"
-    )
-    w = _FN["etl_bridge_writer"](spark, sf_dir).select(
-        _tag("writer"), "movie_id", "person_id"
-    )
-    return s.unionByName(d).unionByName(w)
 
 
 # Shared CDC change-stream fixture (Spark + SQL twins below): full-row
@@ -1031,55 +868,57 @@ def _cdc_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NO_VALID = "CAST(NULL AS BIGINT) AS valid_from_v, CAST(NULL AS BIGINT) AS valid_to_v"
+_CDC_PAYLOAD = ["o_custkey", "o_orderstatus", "total"]
+_CDC_FINAL_SQL = f"""
+    SELECT o_orderkey, o_orderstatus, CAST(total AS DOUBLE) AS total,
+           o_custkey
+    FROM (
+      SELECT *, row_number() OVER (
+                PARTITION BY o_orderkey ORDER BY seq DESC) AS rn
+      FROM ({_CDC_SQL}) ch
+    ) latest
+    WHERE rn = 1 AND op <> 'D'
+"""
+_CDC_SCD2_SQL = f"""
+    SELECT o_orderkey, o_orderstatus, CAST(total AS DOUBLE) AS total,
+           o_custkey, CAST(seq AS BIGINT) AS valid_from_v, valid_to_v
+    FROM (
+      SELECT *, CAST(lead(seq) OVER (
+                PARTITION BY o_orderkey ORDER BY seq) AS BIGINT)
+                AS valid_to_v
+      FROM ({_CDC_SQL}) ch
+    ) versions
+    WHERE op <> 'D'
+"""
 
 
-@register(
+def _cdc_final(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.etl import apply_changes
+
+    changes = _cdc_changes(spark, sf_dir)
+    return apply_changes(changes, "o_orderkey", "seq", "op", _CDC_PAYLOAD)
+
+
+def _cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.etl import scd2_history
+
+    changes = _cdc_changes(spark, sf_dir)
+    return scd2_history(changes, "o_orderkey", "seq", "op", _CDC_PAYLOAD)
+
+
+register_battery(
     "etl_upsert_idempotent",
-    oracle=(
-        _wrap(
-            "once",
-            f"o_orderkey, o_orderstatus, total, o_custkey, {_NO_VALID}",
-            _SQL["etl_upsert_orders"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "twice",
-            f"o_orderkey, o_orderstatus, total, o_custkey, {_NO_VALID}",
-            _SQL["etl_incremental_rerun"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "cdc",
-            f"o_orderkey, o_orderstatus, total, o_custkey, {_NO_VALID}",
-            f"""
-            SELECT o_orderkey, o_orderstatus, CAST(total AS DOUBLE) AS total,
-                   o_custkey
-            FROM (
-              SELECT *, row_number() OVER (
-                        PARTITION BY o_orderkey ORDER BY seq DESC) AS rn
-              FROM ({_CDC_SQL}) ch
-            ) latest
-            WHERE rn = 1 AND op <> 'D'
-            """,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "scd2",
-            "o_orderkey, o_orderstatus, total, o_custkey, "
-            "valid_from_v, valid_to_v",
-            f"""
-            SELECT o_orderkey, o_orderstatus, CAST(total AS DOUBLE) AS total,
-                   o_custkey, CAST(seq AS BIGINT) AS valid_from_v, valid_to_v
-            FROM (
-              SELECT *, CAST(lead(seq) OVER (
-                        PARTITION BY o_orderkey ORDER BY seq) AS BIGINT)
-                        AS valid_to_v
-              FROM ({_CDC_SQL}) ch
-            ) versions
-            WHERE op <> 'D'
-            """,
-        )
+    BatterySpec(
+        "part STRING, o_orderkey BIGINT, o_orderstatus STRING, total DOUBLE, "
+        "o_custkey BIGINT, valid_from_v BIGINT, valid_to_v BIGINT",
+        (
+            branch("once", "etl_upsert_orders"),
+            branch("twice", "etl_incremental_rerun"),
+            branch("cdc", (_cdc_final, _CDC_FINAL_SQL)),
+            branch("scd2", (_cdc_scd2, _CDC_SCD2_SQL),
+                   **_same("valid_from_v", "valid_to_v")),
+        ),
+        defaults=_same("o_orderkey", "o_orderstatus", "total", "o_custkey"),
     ),
     doc="S5 MERGE upsert + S7 idempotent re-run (apply the same batch "
     "twice -> identical table; both branches share one oracle result by "
@@ -1094,35 +933,6 @@ _NO_VALID = "CAST(NULL AS BIGINT) AS valid_from_v, CAST(NULL AS BIGINT) AS valid
     "branches run the identical windows in DuckDB. Subsumes "
     "etl_upsert_orders, etl_incremental_rerun.",
 )
-def etl_upsert_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.etl import apply_changes, scd2_history
-
-    no_valid = [
-        _null("bigint").alias("valid_from_v"),
-        _null("bigint").alias("valid_to_v"),
-    ]
-    once = _FN["etl_upsert_orders"](spark, sf_dir).select(
-        _tag("once"), "o_orderkey", "o_orderstatus", "total", "o_custkey",
-        *no_valid,
-    )
-    twice = _FN["etl_incremental_rerun"](spark, sf_dir).select(
-        _tag("twice"), "o_orderkey", "o_orderstatus", "total", "o_custkey",
-        *no_valid,
-    )
-    payload = ["o_custkey", "o_orderstatus", "total"]
-    changes = _cdc_changes(spark, sf_dir)
-    cdc = apply_changes(changes, "o_orderkey", "seq", "op", payload).select(
-        _tag("cdc"), "o_orderkey", "o_orderstatus",
-        F.col("total").cast("double").alias("total"), "o_custkey",
-        *no_valid,
-    )
-    scd2 = scd2_history(changes, "o_orderkey", "seq", "op", payload).select(
-        _tag("scd2"), "o_orderkey", "o_orderstatus",
-        F.col("total").cast("double").alias("total"), "o_custkey",
-        F.col("valid_from_v").cast("bigint").alias("valid_from_v"),
-        F.col("valid_to_v").cast("bigint").alias("valid_to_v"),
-    )
-    return once.unionByName(twice).unionByName(cdc).unionByName(scd2)
 
 
 # ---------------------------------------------------------------------------
@@ -1735,33 +1545,27 @@ _JLPROJ_ORACLE = """
 """
 
 
-@register(
+def _jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.similarity import jl_project
+
+    return jl_project(
+        load(spark, sf_dir, "embeddings"), "vec_id", "embedding", out_dim=4
+    )
+
+
+register_battery(
     "multimodal_scalar_battery",
-    oracle=(
-        _wrap(
-            "props",
-            "event_type AS k, n_events AS n1, k_sum AS n2, "
-            "CAST(k_max AS BIGINT) AS n3, CAST(NULL AS BIGINT) AS n4, "
-            "CAST(NULL AS BIGINT) AS n5, k_avg AS v",
-            _SQL["multimodal_props_json"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "quantize",
-            "CAST(vec_id AS VARCHAR) AS k, CAST(dim AS BIGINT) AS n1, "
-            "q_sum AS n2, CAST(n_pos AS BIGINT) AS n3, q_max AS n4, "
-            "q_min AS n5, CAST(NULL AS DOUBLE) AS v",
-            _SQL["multimodal_embedding_quantize"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "jlproj",
-            "CAST(vec_id AS VARCHAR) AS k, CAST(out_dim AS BIGINT) AS n1, "
-            "CAST(NULL AS BIGINT) AS n2, CAST(NULL AS BIGINT) AS n3, "
-            "CAST(NULL AS BIGINT) AS n4, CAST(NULL AS BIGINT) AS n5, "
-            "y AS v",
-            _JLPROJ_ORACLE,
-        )
+    BatterySpec(
+        "part STRING, k STRING, n1 BIGINT, n2 BIGINT, n3 BIGINT, n4 BIGINT, "
+        "n5 BIGINT, v DOUBLE",
+        (
+            branch("props", "multimodal_props_json", k="event_type",
+                   n1="n_events", n2="k_sum", n3="k_max", v="k_avg"),
+            branch("quantize", "multimodal_embedding_quantize", k="vec_id",
+                   n1="dim", n2="q_sum", n3="n_pos", n4="q_max", n5="q_min"),
+            branch("jlproj", (_jl_projection, _JLPROJ_ORACLE), k="vec_id",
+                   n1="out_dim", v="y"),
+        ),
     ),
     doc="The multimodal scalar surface in one battery: JSON sidecar "
     "parsing (part=props: from_json schema-on-read -> typed aggregation, "
@@ -1775,42 +1579,6 @@ _JLPROJ_ORACLE = """
     "(part, k, n1..n5, v). All branches hash-checked. Subsumes "
     "multimodal_props_json, multimodal_embedding_quantize.",
 )
-def multimodal_scalar_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _FN["multimodal_props_json"](spark, sf_dir).select(
-        _tag("props"),
-        F.col("event_type").alias("k"),
-        F.col("n_events").alias("n1"),
-        F.col("k_sum").alias("n2"),
-        F.col("k_max").cast("bigint").alias("n3"),
-        _null("bigint").alias("n4"),
-        _null("bigint").alias("n5"),
-        F.col("k_avg").alias("v"),
-    )
-    q = _FN["multimodal_embedding_quantize"](spark, sf_dir).select(
-        _tag("quantize"),
-        F.col("vec_id").cast("string").alias("k"),
-        F.col("dim").cast("bigint").alias("n1"),
-        F.col("q_sum").alias("n2"),
-        F.col("n_pos").cast("bigint").alias("n3"),
-        F.col("q_max").alias("n4"),
-        F.col("q_min").alias("n5"),
-        _null("double").alias("v"),
-    )
-    from ..operators.similarity import jl_project
-
-    jl = jl_project(
-        load(spark, sf_dir, "embeddings"), "vec_id", "embedding", out_dim=4
-    ).select(
-        _tag("jlproj"),
-        F.col("vec_id").cast("string").alias("k"),
-        F.col("out_dim").cast("bigint").alias("n1"),
-        _null("bigint").alias("n2"),
-        _null("bigint").alias("n3"),
-        _null("bigint").alias("n4"),
-        _null("bigint").alias("n5"),
-        F.col("y").alias("v"),
-    )
-    return p.unionByName(q).unionByName(jl)
 
 
 from ..operators.text import PII_PATTERNS as _PII  # noqa: E402
@@ -1927,42 +1695,34 @@ def text_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+def _chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.text import chunk_documents
+
+    return chunk_documents(
+        load(spark, sf_dir, "documents").where(F.col("doc_id") < 200),
+        "text",
+        "doc_id",
+        window=16,
+        stride=8,
+    )
+
+
+register_battery(
     "text_tokens_battery",
-    oracle=(
-        _wrap(
-            "word_counts",
-            "CAST(NULL AS BIGINT) AS k1, n AS k2, word, "
-            "CAST(NULL AS INT) AS n_tok",
-            _SQL["text_word_counts"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "posexplode",
-            "doc_id AS k1, CAST(pos AS BIGINT) AS k2, word, "
-            "CAST(NULL AS INT) AS n_tok",
-            _SQL["scalar_posexplode"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "chunk",
-            "doc_id AS k1, CAST(chunk_idx AS BIGINT) AS k2, "
-            "chunk_text AS word, n_chunk_tokens AS n_tok",
-            _CHUNK_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "pack",
-            "bin_id AS k1, offset_in_bin AS k2, chunk_ref AS word, "
-            "n_chunk_tokens AS n_tok",
-            _PACK_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "tfidf",
-            "doc_id AS k1, tf AS k2, word, dfreq AS n_tok",
-            _TFIDF_ORACLE,
-        )
+    BatterySpec(
+        "part STRING, k1 BIGINT, k2 BIGINT, word STRING, n_tok INTEGER",
+        (
+            branch("word_counts", "text_word_counts", k2="n", word="word"),
+            branch("posexplode", "scalar_posexplode", k1="doc_id", k2="pos",
+                   word="word"),
+            branch("chunk", (_chunks, _CHUNK_ORACLE), k1="doc_id",
+                   k2="chunk_idx", word="chunk_text", n_tok="n_chunk_tokens"),
+            branch("pack", "text_sequence_packing", k1="bin_id",
+                   k2="offset_in_bin", word="chunk_ref",
+                   n_tok="n_chunk_tokens"),
+            branch("tfidf", "text_tfidf_stats", k1="doc_id", k2="tf",
+                   word="word", n_tok="dfreq"),
+        ),
     ),
     doc="Corpus word frequencies (tokenize -> explode -> two-phase count) "
     "+ posexplode indexed unnest + sliding-window document chunking "
@@ -1976,65 +1736,17 @@ def text_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact lexical features, shuffle-hash dfreq join), tagged. "
     "Subsumes text_word_counts, scalar_posexplode.",
 )
-def text_tokens_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.text import chunk_documents
-
-    wc = _FN["text_word_counts"](spark, sf_dir).select(
-        _tag("word_counts"),
-        _null("bigint").alias("k1"),
-        F.col("n").alias("k2"),
-        "word",
-        _null("int").alias("n_tok"),
-    )
-    pe = _FN["scalar_posexplode"](spark, sf_dir).select(
-        _tag("posexplode"),
-        F.col("doc_id").alias("k1"),
-        F.col("pos").cast("bigint").alias("k2"),
-        "word",
-        _null("int").alias("n_tok"),
-    )
-    chunks = chunk_documents(
-        load(spark, sf_dir, "documents").where(F.col("doc_id") < 200),
-        "text",
-        "doc_id",
-        window=16,
-        stride=8,
-    )
-    ch_out = chunks.select(
-        _tag("chunk"),
-        F.col("doc_id").alias("k1"),
-        F.col("chunk_idx").cast("bigint").alias("k2"),
-        F.col("chunk_text").alias("word"),
-        F.col("n_chunk_tokens").alias("n_tok"),
-    )
-    pk = text_sequence_packing(spark, sf_dir).select(
-        _tag("pack"),
-        F.col("bin_id").alias("k1"),
-        F.col("offset_in_bin").alias("k2"),
-        F.col("chunk_ref").alias("word"),
-        F.col("n_chunk_tokens").alias("n_tok"),
-    )
-    ti = text_tfidf_stats(spark, sf_dir).select(
-        _tag("tfidf"),
-        F.col("doc_id").alias("k1"),
-        F.col("tf").alias("k2"),
-        "word",
-        F.col("dfreq").alias("n_tok"),
-    )
-    return (
-        wc.unionByName(pe).unionByName(ch_out).unionByName(pk).unionByName(ti)
-    )
 
 
 @register(
     "text_doc_battery",
     oracle=f"""
-    WITH q AS ({_SQL["text_quality_scores"]}),
-         t AS ({_SQL["text_token_counts"]}),
-         l AS ({_SQL["text_language_id"]}),
-         f AS ({_SQL["text_fingerprints"]}),
-         a AS ({_SQL["scalar_array_battery"]}),
-         rep AS ({_SQL["text_repetition_signals"]}),
+    WITH q AS ({lookup("text_quality_scores").oracle}),
+         t AS ({lookup("text_token_counts").oracle}),
+         l AS ({lookup("text_language_id").oracle}),
+         f AS ({lookup("text_fingerprints").oracle}),
+         a AS ({lookup("scalar_array_battery").oracle}),
+         rep AS ({lookup("text_repetition_signals").oracle}),
          ctoks AS (
            SELECT doc_id, source, string_split(text, ' ') AS tk FROM documents
          ),
@@ -2193,8 +1905,8 @@ def text_doc_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "scalar_events_battery",
     oracle=f"""
-    WITH j AS ({_SQL["scalar_json_battery"]}),
-         n AS ({_SQL["scalar_nan_normalize"]})
+    WITH j AS ({lookup("scalar_json_battery").oracle}),
+         n AS ({lookup("scalar_nan_normalize").oracle})
     SELECT j.event_id, j.k_typed, j.k_raw, j.k_high, j.k_band,
            n.is_nan, n.v_clean, n.v_filled,
            map(['k'], [j.k_typed])['k'][1] AS map_k,
@@ -2210,8 +1922,8 @@ def text_doc_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Subsumes scalar_json_battery, scalar_nan_normalize.",
 )
 def scalar_events_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    j = _FN["scalar_json_battery"](spark, sf_dir)
-    n = _FN["scalar_nan_normalize"](spark, sf_dir)
+    j = lookup("scalar_json_battery").fn(spark, sf_dir)
+    n = lookup("scalar_nan_normalize").fn(spark, sf_dir)
     m = F.create_map(F.lit("k"), F.col("k_typed"))
     return (
         j.join(n, "event_id")
@@ -2227,44 +1939,22 @@ def scalar_events_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+register_battery(
     "sql_text_battery",
-    oracle=(
-        _wrap(
-            "q3",
-            "l_orderkey AS k, revenue AS v, o_orderdate AS d, "
-            "o_orderpriority AS s",
-            _SQL["sql_tpch_q3_shipping_priority"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "q17",
-            "n_small AS k, total_price AS v, CAST(NULL AS TIMESTAMP) AS d, "
-            "CAST(NULL AS VARCHAR) AS s",
-            _SQL["sql_q17_correlated_subquery"],
-        )
+    BatterySpec(
+        "part STRING, k BIGINT, v DOUBLE, d TIMESTAMP, s STRING",
+        (
+            branch("q3", "sql_tpch_q3_shipping_priority", k="l_orderkey",
+                   v="revenue", d="o_orderdate", s="o_orderpriority"),
+            branch("q17", "sql_q17_correlated_subquery", k="n_small",
+                   v="total_price"),
+        ),
     ),
     doc="The spark.sql text path: TPC-H Q3 (scan-join-agg-topk) + Q17 "
     "(correlated scalar subquery, Catalyst-decorrelated), tagged and "
     "normalized. Subsumes sql_tpch_q3_shipping_priority, "
     "sql_q17_correlated_subquery.",
 )
-def sql_text_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q3 = _FN["sql_tpch_q3_shipping_priority"](spark, sf_dir).select(
-        _tag("q3"),
-        F.col("l_orderkey").alias("k"),
-        F.col("revenue").alias("v"),
-        F.col("o_orderdate").alias("d"),
-        F.col("o_orderpriority").alias("s"),
-    )
-    q17 = _FN["sql_q17_correlated_subquery"](spark, sf_dir).select(
-        _tag("q17"),
-        F.col("n_small").alias("k"),
-        F.col("total_price").alias("v"),
-        _null("timestamp").alias("d"),
-        _null("string").alias("s"),
-    )
-    return q3.unionByName(q17)
 
 
 # Versioned dim for the as-of branch: order keys mapped onto the events
@@ -2287,8 +1977,8 @@ _ASOF_ORACLE = """
       )
       GROUP BY user_id, version_ts
     )
-    SELECT e.user_id AS uid, e.ts AS t1, v.version_ts AS t2,
-           e.event_id AS n, v.o_orderkey AS n2, v.total AS v
+    SELECT e.user_id, e.ts, v.version_ts AS asof_version_ts, e.event_id,
+           v.o_orderkey, v.total
     FROM e ASOF LEFT JOIN v
       ON e.user_id = v.user_id AND e.ts >= v.version_ts
 """
@@ -2558,8 +2248,7 @@ _FBMERGE_ORACLE = """
 # first sf1 sweep's %50 fixture produced 28M rows whose harness-side
 # collect dominated the whole battery) — oracle is the plain range join
 _IVJOIN_ORACLE = """
-    SELECT e.user_id AS uid, i.t_start AS t1, i.t_end AS t2,
-           e.event_id AS n, i.trig_id AS n2, e.value AS v
+    SELECT e.user_id, i.t_start, i.t_end, e.event_id, i.trig_id, e.value
     FROM events e JOIN (
       SELECT event_id AS trig_id, ts AS t_start,
              ts + INTERVAL 1 HOUR AS t_end
@@ -2656,150 +2345,106 @@ def stream_fbmerge_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+_WINDOW_AGG = dict(t1="w_start", t2="w_end", n="n_events", n2="n_users")
+_STREAM_JOIN = dict(
+    uid="user_id", t1="l_ts", t2="r_ts", n="l_event_id", n2="r_event_id"
+)
+# a first/last touch event type as its funnel ordinal
+_TOUCH = "CASE {} WHEN 'view' THEN 1 WHEN 'click' THEN 2 WHEN 'signup' THEN 3 END"
+
+
+def _asof_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.timeseries import asof_join
+
+    events = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+    versions = (
+        load(spark, sf_dir, "orders")
+        .select(
+            F.col("o_custkey").alias("user_id"),
+            F.expr(
+                "timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, "
+                "CAST(o_orderkey % 30 AS INT), 0, 0, 0)"
+            ).alias("version_ts"),
+            "o_orderkey",
+            "o_totalprice",
+        )
+        .groupBy("user_id", "version_ts")
+        .agg(
+            F.max("o_orderkey").alias("o_orderkey"),
+            F.max_by("o_totalprice", "o_orderkey").alias("total"),
+        )
+    )
+    return asof_join(
+        events, versions, "user_id", "ts", "version_ts", ["o_orderkey", "total"]
+    )
+
+
+def _interval_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bucketized points-in-interval join (operators/timeseries.py::
+    interval_join — equi-join on 1h time buckets, no cross product;
+    bucket_width == the interval span, so each interval spans <= 2
+    buckets)."""
+    from ..operators.timeseries import interval_join
+
+    ev_pts = load(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "value"
+    )
+    trig = (
+        load(spark, sf_dir, "events")
+        .where(F.col("event_id") % 997 == 0)
+        .select(
+            F.col("event_id").alias("trig_id"),
+            F.col("ts").alias("t_start"),
+            (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("t_end"),
+        )
+    )
+    return interval_join(
+        ev_pts, trig, "ts", "t_start", "t_end", bucket_width=3600
+    )
+
+
+register_battery(
     "stream_battery",
-    oracle=(
-        _wrap(
-            "tumble",
-            "CAST(NULL AS BIGINT) AS uid, w_start AS t1, w_end AS t2, "
-            "n_events AS n, n_users AS n2, value_sum AS v",
-            _SQL["stream_tumbling_window"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "slide",
-            "CAST(NULL AS BIGINT) AS uid, w_start AS t1, w_end AS t2, "
-            "n_events AS n, n_users AS n2, CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_sliding_window"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "session",
-            "user_id AS uid, session_start AS t1, session_last AS t2, "
-            "n_events AS n, session_id AS n2, CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_sessionize"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "session_builtin",
-            "user_id AS uid, session_start AS t1, session_end AS t2, "
-            "n_events AS n, CAST(NULL AS BIGINT) AS n2, "
-            "CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_session_window"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "asof",
-            "uid, t1, t2, n, n2, v",
-            _ASOF_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "late",
-            "CAST(NULL AS BIGINT) AS uid, w_start AS t1, w_end AS t2, "
-            "n_events AS n, n_users AS n2, value_sum AS v",
-            _SQL["stream_late_data_drop"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "ss",
-            "user_id AS uid, l_ts AS t1, r_ts AS t2, "
-            "l_event_id AS n, r_event_id AS n2, CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_stream_join"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "ssl",
-            "user_id AS uid, l_ts AS t1, r_ts AS t2, "
-            "l_event_id AS n, r_event_id AS n2, CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_stream_left_outer"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "ssf",
-            "user_id AS uid, l_ts AS t1, r_ts AS t2, "
-            "l_event_id AS n, r_event_id AS n2, CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_stream_full_outer"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "trend",
-            "user_id AS uid, w_start AS t1, w_end AS t2, "
-            "n_events AS n, CAST(rank AS BIGINT) AS n2, "
-            "CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_trending_topk"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "ffill",
-            "uid, t1, CAST(NULL AS TIMESTAMP) AS t2, n, "
-            "CAST(NULL AS BIGINT) AS n2, v",
-            _FFILL_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "enrich",
-            "uid, t1, CAST(NULL AS TIMESTAMP) AS t2, n, n2, v",
-            _ENRICH_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "sdedup",
-            "user_id AS uid, ts AS t1, CAST(NULL AS TIMESTAMP) AS t2, "
-            "event_id AS n, CAST(NULL AS BIGINT) AS n2, value AS v",
-            "SELECT user_id, ts, event_id, value FROM events",
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "ucount",
-            "uid, CAST(NULL AS TIMESTAMP) AS t1, "
-            "CAST(NULL AS TIMESTAMP) AS t2, n, CAST(NULL AS BIGINT) AS n2, "
-            "CAST(NULL AS DOUBLE) AS v",
-            "SELECT user_id AS uid, CAST(count(*) AS BIGINT) AS n "
-            "FROM events GROUP BY user_id",
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "funnel",
-            "user_id AS uid, t_1 AS t1, t_2 AS t2, "
-            "CAST(n_steps AS BIGINT) AS n, epoch_us(t_3) AS n2, "
-            "CAST(NULL AS DOUBLE) AS v",
-            _FUNNEL_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "retention",
-            "CAST(NULL AS BIGINT) AS uid, "
-            "CAST(cohort_date AS TIMESTAMP) AS t1, "
-            "CAST(NULL AS TIMESTAMP) AS t2, CAST(day_offset AS BIGINT) AS n, "
-            "n_users AS n2, CAST(NULL AS DOUBLE) AS v",
-            _RETENTION_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "fbmerge",
-            "CAST(NULL AS BIGINT) AS uid, CAST(NULL AS TIMESTAMP) AS t1, "
-            "CAST(NULL AS TIMESTAMP) AS t2, CAST(ok AS BIGINT) AS n, "
-            "n_rows AS n2, CAST(NULL AS DOUBLE) AS v",
-            _FBMERGE_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "ivjoin",
-            "uid, t1, t2, n, n2, v",
-            _IVJOIN_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "attrib",
-            "user_id AS uid, ts AS t1, CAST(NULL AS TIMESTAMP) AS t2, "
-            "event_id AS n, "
-            "CAST(CASE first_touch WHEN 'view' THEN 1 WHEN 'click' THEN 2 "
-            "WHEN 'signup' THEN 3 END AS BIGINT) AS n2, "
-            "CAST(CASE last_touch WHEN 'view' THEN 1 WHEN 'click' THEN 2 "
-            "WHEN 'signup' THEN 3 END AS DOUBLE) AS v",
-            _ATTRIBUTION_ORACLE,
-        )
+    BatterySpec(
+        "part STRING, uid BIGINT, t1 TIMESTAMP, t2 TIMESTAMP, n BIGINT, "
+        "n2 BIGINT, v DOUBLE",
+        (
+            branch("tumble", "stream_tumbling_window", **_WINDOW_AGG,
+                   v="value_sum"),
+            branch("slide", "stream_sliding_window", **_WINDOW_AGG),
+            branch("session", "stream_sessionize", uid="user_id",
+                   t1="session_start", t2="session_last", n="n_events",
+                   n2="session_id"),
+            branch("session_builtin", "stream_session_window", uid="user_id",
+                   t1="session_start", t2="session_end", n="n_events"),
+            branch("asof", (_asof_versions, _ASOF_ORACLE), uid="user_id",
+                   t1="ts", t2="asof_version_ts", n="event_id",
+                   n2="o_orderkey", v="total"),
+            branch("late", "stream_late_data_drop", **_WINDOW_AGG,
+                   v="value_sum"),
+            branch("ss", "stream_stream_join", **_STREAM_JOIN),
+            branch("ssl", "stream_stream_left_outer", **_STREAM_JOIN),
+            branch("ssf", "stream_stream_full_outer", **_STREAM_JOIN),
+            branch("trend", "stream_trending_topk", uid="user_id",
+                   t1="w_start", t2="w_end", n="n_events", n2="rank"),
+            branch("ffill", "stream_forward_fill", **_same("uid", "t1", "n", "v")),
+            branch("enrich", "stream_static_enrich",
+                   **_same("uid", "t1", "n", "n2", "v")),
+            branch("sdedup", "stream_stateful_dedup_dual", uid="user_id",
+                   t1="ts", n="event_id", v="value"),
+            branch("ucount", "stream_stateful_count_dual", **_same("uid", "n")),
+            branch("funnel", "events_funnel", uid="user_id", t1="t_1",
+                   t2="t_2", n="n_steps", n2="unix_micros(t_3)"),
+            branch("retention", "events_retention", t1="cohort_date",
+                   n="day_offset", n2="n_users"),
+            branch("fbmerge", "stream_fbmerge_check", n="ok", n2="n_rows"),
+            branch("ivjoin", (_interval_points, _IVJOIN_ORACLE),
+                   uid="user_id", t1="t_start", t2="t_end", n="event_id",
+                   n2="trig_id", v="value"),
+            branch("attrib", "events_attribution", uid="user_id", t1="ts",
+                   n="event_id", n2=_TOUCH.format("first_touch"),
+                   v=_TOUCH.format("last_touch")),
+        ),
     ),
     doc="The streaming batch-dual surface in one battery: tumbling window, "
     "sliding window, lag+cumsum sessionization, the built-in "
@@ -2846,248 +2491,6 @@ def stream_fbmerge_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_trending_topk (part=trend: salted two-phase top-3 most "
     "active users per 6h window), stream_fbmerge_check.",
 )
-def stream_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _FN["stream_tumbling_window"](spark, sf_dir).select(
-        _tag("tumble"),
-        _null("bigint").alias("uid"),
-        F.col("w_start").alias("t1"),
-        F.col("w_end").alias("t2"),
-        F.col("n_events").alias("n"),
-        F.col("n_users").alias("n2"),
-        F.col("value_sum").alias("v"),
-    )
-    s = _FN["stream_sliding_window"](spark, sf_dir).select(
-        _tag("slide"),
-        _null("bigint").alias("uid"),
-        F.col("w_start").alias("t1"),
-        F.col("w_end").alias("t2"),
-        F.col("n_events").alias("n"),
-        F.col("n_users").alias("n2"),
-        _null("double").alias("v"),
-    )
-    m = _FN["stream_sessionize"](spark, sf_dir).select(
-        _tag("session"),
-        F.col("user_id").alias("uid"),
-        F.col("session_start").alias("t1"),
-        F.col("session_last").alias("t2"),
-        F.col("n_events").alias("n"),
-        F.col("session_id").alias("n2"),
-        _null("double").alias("v"),
-    )
-    b = _FN["stream_session_window"](spark, sf_dir).select(
-        _tag("session_builtin"),
-        F.col("user_id").alias("uid"),
-        F.col("session_start").alias("t1"),
-        F.col("session_end").alias("t2"),
-        F.col("n_events").alias("n"),
-        _null("bigint").alias("n2"),
-        _null("double").alias("v"),
-    )
-    from ..operators.timeseries import asof_join
-
-    events = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    versions = (
-        load(spark, sf_dir, "orders")
-        .select(
-            F.col("o_custkey").alias("user_id"),
-            F.expr(
-                "timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, "
-                "CAST(o_orderkey % 30 AS INT), 0, 0, 0)"
-            ).alias("version_ts"),
-            "o_orderkey",
-            "o_totalprice",
-        )
-        .groupBy("user_id", "version_ts")
-        .agg(
-            F.max("o_orderkey").alias("o_orderkey"),
-            F.max_by("o_totalprice", "o_orderkey").alias("total"),
-        )
-    )
-    a = asof_join(
-        events, versions, "user_id", "ts", "version_ts", ["o_orderkey", "total"]
-    ).select(
-        _tag("asof"),
-        F.col("user_id").alias("uid"),
-        F.col("ts").alias("t1"),
-        F.col("asof_version_ts").alias("t2"),
-        F.col("event_id").alias("n"),
-        F.col("o_orderkey").alias("n2"),
-        F.col("total").alias("v"),
-    )
-    ld = _FN["stream_late_data_drop"](spark, sf_dir).select(
-        _tag("late"),
-        _null("bigint").alias("uid"),
-        F.col("w_start").alias("t1"),
-        F.col("w_end").alias("t2"),
-        F.col("n_events").alias("n"),
-        F.col("n_users").alias("n2"),
-        F.col("value_sum").alias("v"),
-    )
-    ss = _FN["stream_stream_join"](spark, sf_dir).select(
-        _tag("ss"),
-        F.col("user_id").alias("uid"),
-        F.col("l_ts").alias("t1"),
-        F.col("r_ts").alias("t2"),
-        F.col("l_event_id").alias("n"),
-        F.col("r_event_id").alias("n2"),
-        _null("double").alias("v"),
-    )
-    ssl = _FN["stream_stream_left_outer"](spark, sf_dir).select(
-        _tag("ssl"),
-        F.col("user_id").alias("uid"),
-        F.col("l_ts").alias("t1"),
-        F.col("r_ts").alias("t2"),
-        F.col("l_event_id").alias("n"),
-        F.col("r_event_id").alias("n2"),
-        _null("double").alias("v"),
-    )
-    ssf = _FN["stream_stream_full_outer"](spark, sf_dir).select(
-        _tag("ssf"),
-        F.col("user_id").alias("uid"),
-        F.col("l_ts").alias("t1"),
-        F.col("r_ts").alias("t2"),
-        F.col("l_event_id").alias("n"),
-        F.col("r_event_id").alias("n2"),
-        _null("double").alias("v"),
-    )
-    trend = _FN["stream_trending_topk"](spark, sf_dir).select(
-        _tag("trend"),
-        F.col("user_id").alias("uid"),
-        F.col("w_start").alias("t1"),
-        F.col("w_end").alias("t2"),
-        F.col("n_events").alias("n"),
-        F.col("rank").cast("long").alias("n2"),
-        _null("double").alias("v"),
-    )
-    ff = stream_forward_fill(spark, sf_dir).select(
-        _tag("ffill"),
-        "uid",
-        "t1",
-        _null("timestamp").alias("t2"),
-        "n",
-        _null("bigint").alias("n2"),
-        "v",
-    )
-    en = stream_static_enrich(spark, sf_dir).select(
-        _tag("enrich"),
-        "uid",
-        "t1",
-        _null("timestamp").alias("t2"),
-        "n",
-        "n2",
-        "v",
-    )
-    sd = stream_stateful_dedup_dual(spark, sf_dir).select(
-        _tag("sdedup"),
-        F.col("user_id").alias("uid"),
-        F.col("ts").alias("t1"),
-        _null("timestamp").alias("t2"),
-        F.col("event_id").alias("n"),
-        _null("bigint").alias("n2"),
-        F.col("value").alias("v"),
-    )
-    uc = stream_stateful_count_dual(spark, sf_dir).select(
-        _tag("ucount"),
-        "uid",
-        _null("timestamp").alias("t1"),
-        _null("timestamp").alias("t2"),
-        "n",
-        _null("bigint").alias("n2"),
-        _null("double").alias("v"),
-    )
-    fu = events_funnel(spark, sf_dir).select(
-        _tag("funnel"),
-        F.col("user_id").alias("uid"),
-        F.col("t_1").alias("t1"),
-        F.col("t_2").alias("t2"),
-        F.col("n_steps").cast("bigint").alias("n"),
-        F.unix_micros("t_3").alias("n2"),
-        _null("double").alias("v"),
-    )
-    re = events_retention(spark, sf_dir).select(
-        _tag("retention"),
-        _null("bigint").alias("uid"),
-        # T.TimestampType(), not the string "timestamp": the string form
-        # resolves via spark.sql.timestampType (catalog.py discipline)
-        F.col("cohort_date").cast(T.TimestampType()).alias("t1"),
-        _null("timestamp").alias("t2"),
-        F.col("day_offset").cast("bigint").alias("n"),
-        F.col("n_users").alias("n2"),
-        _null("double").alias("v"),
-    )
-    fb = stream_fbmerge_check(spark, sf_dir).select(
-        _tag("fbmerge"),
-        _null("bigint").alias("uid"),
-        _null("timestamp").alias("t1"),
-        _null("timestamp").alias("t2"),
-        F.col("ok").cast("bigint").alias("n"),
-        F.col("n_rows").alias("n2"),
-        _null("double").alias("v"),
-    )
-    # part=ivjoin: bucketized points-in-interval join (operators/
-    # timeseries.py::interval_join — equi-join on 1h time buckets, no
-    # cross product; bucket_width == the interval span, so each
-    # interval spans <= 2 buckets)
-    from ..operators.timeseries import interval_join
-
-    ev_pts = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    trig = (
-        load(spark, sf_dir, "events")
-        .where(F.col("event_id") % 997 == 0)
-        .select(
-            F.col("event_id").alias("trig_id"),
-            F.col("ts").alias("t_start"),
-            (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("t_end"),
-        )
-    )
-    iv = interval_join(
-        ev_pts, trig, "ts", "t_start", "t_end", bucket_width=3600
-    ).select(
-        _tag("ivjoin"),
-        F.col("user_id").alias("uid"),
-        F.col("t_start").alias("t1"),
-        F.col("t_end").alias("t2"),
-        F.col("event_id").alias("n"),
-        F.col("trig_id").alias("n2"),
-        F.col("value").alias("v"),
-    )
-    at = events_attribution(spark, sf_dir)
-    ch = lambda c: (
-        F.when(F.col(c) == "view", 1)
-        .when(F.col(c) == "click", 2)
-        .when(F.col(c) == "signup", 3)
-    )
-    at = at.select(
-        _tag("attrib"),
-        F.col("user_id").alias("uid"),
-        F.col("ts").alias("t1"),
-        _null("timestamp").alias("t2"),
-        F.col("event_id").alias("n"),
-        ch("first_touch").cast("bigint").alias("n2"),
-        ch("last_touch").cast("double").alias("v"),
-    )
-    return (
-        t.unionByName(s)
-        .unionByName(m)
-        .unionByName(b)
-        .unionByName(a)
-        .unionByName(ld)
-        .unionByName(ss)
-        .unionByName(ssl)
-        .unionByName(ssf)
-        .unionByName(trend)
-        .unionByName(ff)
-        .unionByName(en)
-        .unionByName(sd)
-        .unionByName(uc)
-        .unionByName(fu)
-        .unionByName(re)
-        .unionByName(fb)
-        .unionByName(iv)
-        .unionByName(at)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -8698,23 +8101,9 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Extension battery: round-7 surfaces consolidated for slot discipline.
+# Streaming incremental near-dup dedup (round 13): the continuously-
+# ingesting-corpus composition of the txn sink and the MinHash probe.
 # ---------------------------------------------------------------------------
-
-# The driver checks the FIRST 50 registry entries in registration order
-# (round-2 lesson: with 78 registered, only 50 got CORRECTNESS rows).
-# Round 7 added five driver-facing queries, pushing the registry to 55 —
-# which would silently drop the LAST five registered (text_doc_battery,
-# scalar_events_battery, sql_text_battery, stream_battery,
-# udf_scan_parse_pipeline: five of the heaviest hash-green batteries).
-# This battery folds the five newcomers plus sim_cosine_topk into ONE
-# driver slot over a shared typed schema, bringing the registry back to
-# exactly 50; every constituent stays individually oracle-checked in
-# tests/test_oracle_parity via SUBSUMED.
-
-_NB = "CAST(NULL AS BIGINT)"
-_NS = "CAST(NULL AS VARCHAR)"
-_ND = "CAST(NULL AS DOUBLE)"
 
 _SDD_ORACLE = f"""
 WITH reps AS (
@@ -8738,1484 +8127,403 @@ SELECT 'sdd_bounds', NULL, NULL, CAST(NULL AS BIGINT), true
 """
 
 
-_EXT_ORACLE = "\nUNION ALL\n".join(
-    [
-        f"SELECT 'jdbc_'||part AS part, c_custkey AS a, {_NB} AS b, "
-        f"{_NB} AS n, c_mktsegment AS k, c_name AS s, "
-        f"CAST(c_acctbal AS DOUBLE) AS v, ok "
-        f"FROM ({_SQL['sink_jdbc_roundtrip']}) t",
-        f"SELECT 'js_'||part AS part, {_NB} AS a, {_NB} AS b, n, k, "
-        f"{_NS} AS s, v, ok FROM ({_SQL['join_scale_battery']}) t",
-        f"SELECT 'bm25' AS part, doc_id AS a, {_NB} AS b, {_NB} AS n, "
-        f"{_NS} AS k, {_NS} AS s, bm25 AS v, true AS ok "
-        f"FROM ({_SQL['text_bm25_scores']}) t",
-        f"SELECT 'ts_'||part AS part, uid AS a, t AS b, n, {_NS} AS k, "
-        f"{_NS} AS s, v, true AS ok FROM ({_SQL['timeseries_battery']}) t",
-        f"SELECT 'lk_'||part AS part, a, b, d AS n, {_NS} AS k, "
-        f"{_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_SQL['linkage_battery']}) t",
-        f"SELECT 'cos' AS part, query_id AS a, neighbor_id AS b, "
-        f"CAST(rank AS BIGINT) AS n, {_NS} AS k, {_NS} AS s, {_ND} AS v, "
-        f"true AS ok FROM ({_SQL['sim_cosine_topk']}) t",
-        f"SELECT 'segdedup' AS part, doc_id AS a, {_NB} AS b, n_kept AS n, "
-        f"{_NS} AS k, clean_text AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_SEGDEDUP_ORACLE}) t",
-        f"SELECT 'cms_'||part AS part, a, b, n, {_NS} AS k, {_NS} AS s, "
-        f"{_ND} AS v, true AS ok FROM ({_CMS_ORACLE}) t",
-        f"SELECT 'bf_'||part AS part, a, b, n, {_NS} AS k, {_NS} AS s, "
-        f"{_ND} AS v, true AS ok FROM ({_BLOOM_ORACLE}) t",
-        f"SELECT 'mba' AS part, item_a AS a, item_b AS b, c_ab AS n, "
-        f"CAST(c_a AS VARCHAR) AS k, CAST(c_b AS VARCHAR) AS s, "
-        f"confidence AS v, true AS ok FROM ({_MBA_ORACLE}) t",
+@register(
+    "stream_incremental_dedup",
+    oracle=_SDD_ORACLE,
+    doc="Streaming incremental near-dup dedup (round 13 — streaming/"
+    "jobs.py::stream_near_dup_ingest): the continuously-ingesting-"
+    "corpus composition of two verified pieces — per microbatch, the "
+    "incoming docs are shingled/signed/banded ONCE, probed against the "
+    "ACCUMULATED index txn tables for cross-batch duplicates (work ∝ "
+    "batch + matched buckets, never corpus) and against themselves for "
+    "within-batch pairs, then dup pairs and index rows append under "
+    "app_txn idempotence (sources/txn.py) so every pair is recorded "
+    "EXACTLY ONCE across restarts/replays.  Fixture: distinct-text "
+    "shingleable reps stream in 3 microbatches (sequential availableNow "
+    "deliveries — the stream_fbmerge_check pattern), then a 4th batch "
+    "plants EXACT twins (id + 300000, the guarded _twin_id offset) of "
+    "every 13th rep.  Identical text => identical signature => same "
+    "bucket in every band, so each twin MUST surface with jaccard "
+    "exactly 1.0 (the dedup_incremental_probe containment guarantee, "
+    "now across the streaming boundary): part=sdd_planted pins each "
+    "expected (rep, twin) pair's presence per-row; sdd_containment "
+    "pins found == planted; sdd_restart REPLAYS every batch against a "
+    "fresh checkpoint and pins the dups table unchanged (the exactly-"
+    "once half); sdd_bounds pins every emitted pair inside "
+    "[threshold, 1].  Hash-seed-dependent natural near-dup pairs stay "
+    "engine-side (they ride the table but not the oracle), and the "
+    "runtime path (restarts, drop-mode chains) is pinned in "
+    "tests/test_streaming.py.",
+)
+def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
+    import shutil
+    import tempfile
+
+    from ..operators.dedup import collapse_exact_first
+    from ..operators.pinning import eager_pin
+    from ..sources.txn import txn_read
+    from ..streaming.jobs import stream_near_dup_ingest
+    from .llm_data import _twin_id
+
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    shingleable = F.col("text").rlike(r"(^| )\S+ \S+ \S+")
+    base = eager_pin(
+        collapse_exact_first(docs, "text", "doc_id").where(shingleable)
+    )
+    planted = eager_pin(base.where(F.col("doc_id") % 13 == 0))
+    twins = planted.select(
+        _twin_id(F.col("doc_id")).alias("doc_id"), "text"
+    )
+
+    scratch = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".tmp"
+    )
+    os.makedirs(scratch, exist_ok=True)
+    work = tempfile.mkdtemp(prefix="sdd_", dir=scratch)
+    try:
+        src = os.path.join(work, "src")
+        index_dir = os.path.join(work, "idx")
+
+        def run(ckpt: str) -> None:
+            # maxFilesPerTrigger=1: a FRESH-checkpoint replay must
+            # re-deliver the same four per-file microbatches (ids 0-3),
+            # exercising every app_txn no-op — without it the replay
+            # collapses into one batch and only id 0's idempotence is
+            # checked (round-13 review finding)
+            stream = (
+                spark.readStream.schema(base.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            )
+            q = (
+                stream_near_dup_ingest(
+                    stream, index_dir, ckpt, app_id="sdd",
+                    index_duplicates=True,
+                )
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+
+        ckpt = os.path.join(work, "ckpt")
+        # three deliveries + one twin delivery, each its own microbatch
+        for kk in range(3):
+            base.where(F.col("doc_id") % 3 == kk).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+            run(ckpt)
+        twins.coalesce(1).write.mode("append").parquet(src)
+        run(ckpt)
+        dups1 = eager_pin(txn_read(spark, os.path.join(index_dir, "dups")))
+        # FULL replay against a fresh checkpoint: every append must be
+        # an app_txn no-op — the dups table byte-identical
+        run(os.path.join(work, "ckpt2"))
+        dups2 = eager_pin(txn_read(spark, os.path.join(index_dir, "dups")))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+    exact1 = dups1.where(F.col("jaccard") == 1.0).select(
+        "new_id", "existing_id"
+    )
+    planted_rows = planted.select(
+        F.lit("sdd_planted").alias("part"),
+        F.col("doc_id").alias("a"),
+        (F.col("doc_id") + 300000).alias("b"),
+        F.lit(None).cast("bigint").alias("n"),
+    ).join(
+        exact1.select(
+            F.col("existing_id").alias("a"), F.col("new_id").alias("b")
+        ).withColumn("ok", F.lit(True)),
+        ["a", "b"],
+        "left",
+    ).select("part", "a", "b", "n", F.coalesce("ok", F.lit(False)).alias("ok"))
+    nulls = [
+        F.lit(None).cast("bigint").alias("a"),
+        F.lit(None).cast("bigint").alias("b"),
+    ]
+    n_found = planted.select(
+        F.col("doc_id").alias("a"),
+        (F.col("doc_id") + 300000).alias("b"),
+    ).join(
+        exact1.select(
+            F.col("existing_id").alias("a"), F.col("new_id").alias("b")
+        ),
+        ["a", "b"],
+        "left_semi",
+    ).agg(F.count("*").alias("h"))
+    containment = (
+        planted.agg(F.count("*").cast("bigint").alias("t"))
+        .crossJoin(F.broadcast(n_found))
+        .select(
+            F.lit("sdd_containment").alias("part"),
+            *nulls,
+            F.col("t").alias("n"),
+            (F.col("h") == F.col("t")).alias("ok"),
+        )
+    )
+    unchanged = (
+        dups1.exceptAll(dups2).isEmpty()
+        and dups2.exceptAll(dups1).isEmpty()
+    )
+    restart = planted.agg(F.count("*").cast("bigint").alias("n")).select(
+        F.lit("sdd_restart").alias("part"),
+        *nulls,
+        "n",
+        F.lit(bool(unchanged)).alias("ok"),
+    )
+    bounds = dups1.agg(
+        F.coalesce(
+            F.min(
+                (F.col("jaccard") >= 0.5) & (F.col("jaccard") <= 1.0)
+            ),
+            F.lit(True),
+        ).alias("ok")
+    ).select(
+        F.lit("sdd_bounds").alias("part"),
+        *nulls,
+        F.lit(None).cast("bigint").alias("n"),
+        "ok",
+    )
+    return (
+        planted_rows.unionByName(containment)
+        .unionByName(restart)
+        .unionByName(bounds)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Extension battery: round-7 surfaces consolidated for slot discipline.
+# ---------------------------------------------------------------------------
+
+# The driver checks the FIRST 50 registry entries in registration order
+# (round-2 lesson: with 78 registered, only 50 got CORRECTNESS rows).
+# Round 7 added five driver-facing queries, pushing the registry to 55 —
+# which would silently drop the LAST five registered (text_doc_battery,
+# scalar_events_battery, sql_text_battery, stream_battery,
+# udf_scan_parse_pipeline: five of the heaviest hash-green batteries).
+# This battery folds the five newcomers plus sim_cosine_topk into ONE
+# driver slot over a shared typed schema, bringing the registry back to
+# exactly 50; every constituent stays individually oracle-checked in
+# tests/test_oracle_parity via SUBSUMED.
+
+# Each slot expression is Spark SQL that DuckDB also parses (see
+# BatterySpec.branch_oracle); shared projections of the media decoders' frame/image
+# stats rows.
+_WXH = "CAST(width AS STRING) || 'x' || CAST(height AS STRING)"
+_YRANGE = "CAST(y_min AS STRING) || ':' || CAST(y_max AS STRING)"
+_FRAME = dict(a="doc_id", b="frame_idx", n="y_sum", k=_WXH, s=_YRANGE, v="ts_ms")
+_IMAGE = dict(a="doc_id", b="y_min", n="y_sum", k=_WXH, v="y_max")
+# constituents that already emit the battery's own slots
+_SAME = _same("part", "a", "b", "n", "k", "s", "v", "ok")
+
+_EXTENSION = BatterySpec(
+    "part STRING, a BIGINT, b BIGINT, n BIGINT, k STRING, s STRING, "
+    "v DOUBLE, ok BOOLEAN",
+    (
+        branch("jdbc_", "sink_jdbc_roundtrip", a="c_custkey",
+               k="c_mktsegment", s="c_name", v="c_acctbal", ok="ok"),
+        branch("js_", "join_scale_battery", n="n", k="k", v="v", ok="ok"),
+        branch("bm25", "text_bm25_scores", a="doc_id", v="bm25"),
+        branch("ts_", "timeseries_battery", a="uid", b="t", n="n", v="v"),
+        branch("lk_", "linkage_battery", a="a", b="b", n="d"),
+        branch("cos", "sim_cosine_topk", a="query_id", b="neighbor_id",
+               n="rank"),
+        branch("segdedup", "text_segment_dedup", a="doc_id", n="n_kept",
+               s="clean_text"),
+        branch("cms_", "agg_count_min", a="a", b="b", n="n"),
+        branch("bf_", "agg_bloom_membership", a="a", b="b", n="n"),
+        branch("mba", "agg_market_basket", a="item_a", b="item_b",
+               n="c_ab", k="c_a", s="c_b", v="confidence"),
         # at_v rides the double slot; ks itself is fully determined by
         # the hashed integers (n / (a*b)) and is value-checked in the
         # constituent's own parity test
-        f"SELECT 'ks' AS part, n_a AS a, n_b AS b, d_scaled AS n, "
-        f"{_NS} AS k, {_NS} AS s, at_v AS v, "
-        f"true AS ok FROM ({_KS_ORACLE}) t",
-        f"SELECT 'chi2' AS part, observed AS a, n_a AS b, n_b AS n, "
-        f"a AS k, b AS s, contrib AS v, true AS ok "
-        f"FROM ({_CHI2_ORACLE}) t",
-        f"SELECT 'vocab' AS part, n_tokens AS a, n_types AS b, "
-        f"n_hapax AS n, source AS k, CAST(n_docs AS VARCHAR) AS s, "
-        f"ttr AS v, true AS ok FROM ({_VOCAB_ORACLE}) t",
-        f"SELECT 'benford' AS part, CAST(digit AS BIGINT) AS a, n AS b, "
-        f"n_total AS n, {_NS} AS k, {_NS} AS s, dev AS v, "
-        f"true AS ok FROM ({_BENFORD_ORACLE}) t",
+        branch("ks", "agg_ks_drift", a="n_a", b="n_b", n="d_scaled",
+               v="at_v"),
+        branch("chi2", "agg_chi_square", a="observed", b="n_a", n="n_b",
+               k="a", s="b", v="contrib"),
+        branch("vocab", "text_vocab_profile", a="n_tokens", b="n_types",
+               n="n_hapax", k="source", s="n_docs", v="ttr"),
+        branch("benford", "agg_benford_audit", a="digit", b="n",
+               n="n_total", v="dev"),
         # timestamps ride the string slots as epoch-micro integers
         # (integer formatting is deterministic cross-engine)
-        f"SELECT 'streak' AS part, user_id AS a, streak_len AS b, "
-        f"n_events_before AS n, "
-        f"CAST(epoch_us(start_ts) AS VARCHAR) AS k, "
-        f"CAST(epoch_us(end_ts) AS VARCHAR) AS s, {_ND} AS v, "
-        f"true AS ok FROM ({_STREAK_ORACLE}) t",
-        f"SELECT 'rollmad' AS part, user_id AS a, event_id AS b, "
-        f"n_obs AS n, {_NS} AS k, {_NS} AS s, "
-        f"roll_med + roll_mad AS v, is_anomaly AS ok "
-        f"FROM ({_ROLLMAD_ORACLE}) t",
-        f"SELECT 'cusum' AS part, user_id AS a, event_id AS b, "
-        f"cusum_pos AS n, CAST(cusum_neg AS VARCHAR) AS k, "
-        f"CAST(alarm_neg AS VARCHAR) AS s, value AS v, alarm_pos AS ok "
-        f"FROM ({_CUSUM_ORACLE}) t",
-        f"SELECT 'winnow' AS part, doc_id AS a, fp_pos AS b, "
-        f"fp_hash AS n, {_NS} AS k, {_NS} AS s, {_ND} AS v, "
-        f"true AS ok FROM ({_WINNOW_ORACLE}) t",
-        f"SELECT 'qnorm' AS part, doc_id AS a, norm_value AS b, "
-        f"pooled_target AS n, source AS k, "
-        f"CAST(src_rank AS VARCHAR) AS s, "
-        f"CAST(n_chars AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_QNORM_ORACLE}) t",
-        f"SELECT 'sdec' AS part, epoch_day AS a, y_scaled AS b, "
-        f"n_obs * 8 + phase AS n, event_type AS k, {_NS} AS s, "
-        f"y + coalesce(trend, 0) + coalesce(seasonal, 0) "
-        f"+ coalesce(remainder, 0) AS v, true AS ok "
-        f"FROM ({_SDECOMP_ORACLE}) t",
-        f"SELECT 'twap' AS part, user_id AS a, bucket AS b, "
-        f"covered_us AS n, CAST(n_pieces AS VARCHAR) AS k, {_NS} AS s, "
-        f"twap AS v, true AS ok FROM ({_TWAP_ORACLE}) t",
-        f"SELECT 'skew' AS part, n_keys AS a, max_count AS b, "
-        f"n_rows AS n, CAST(top1_ppm AS VARCHAR) AS k, "
-        f"p50_count || ':' || p90_count || ':' || p99_count AS s, "
-        f"gini AS v, true AS ok FROM ({_SKEW_ORACLE}) t",
-        f"SELECT 'ltrend' AS part, n_obs AS a, {_NB} AS b, {_NB} AS n, "
-        f"event_type AS k, {_NS} AS s, "
-        f"slope + intercept + r2 AS v, true AS ok "
-        f"FROM ({_LTREND_ORACLE}) t",
-        f"SELECT 'wquant' AS part, w_total AS a, {_NB} AS b, {_NB} AS n, "
-        f"l_returnflag AS k, {_NS} AS s, "
-        f"wq_1_2 + wq_9_10 + wq_99_100 AS v, true AS ok "
-        f"FROM ({_WQUANT_ORACLE}) t",
-        f"SELECT 'pmi' AS part, c_xy AS a, c_x * 100000 + c_y AS b, "
-        f"n_pairs AS n, w1 AS k, w2 AS s, pmi AS v, true AS ok "
-        f"FROM ({_PMI_ORACLE}) t",
-        f"SELECT 'burst' AS part, user_id AS a, n_gaps AS b, {_NB} AS n, "
-        f"{_NS} AS k, {_NS} AS s, "
-        f"mean_gap_us + coalesce(cv2, 0) + coalesce(burstiness, 0) AS v, "
-        f"true AS ok FROM ({_BURST_ORACLE}) t",
-        f"SELECT 'wau' AS part, epoch_day AS a, dau AS b, wau AS n, "
-        f"{_NS} AS k, {_NS} AS s, {_ND} AS v, wau_within_bound AS ok "
-        f"FROM ({_WAU_ORACLE}) t",
-        f"SELECT 'ovlp' AS part, n_a AS a, n_b AS b, "
-        f"n_inter * 1000000 + n_union AS n, g1 AS k, g2 AS s, "
-        f"{_ND} AS v, inter_within_bound AS ok "
-        f"FROM ({_OVERLAP_ORACLE}) t",
-        f"SELECT 'duprate' AS part, n_docs AS a, n_distinct AS b, "
-        f"n_clones * 1000 + max_clone_count AS n, source AS k, "
-        f"CAST(dup_ppm AS VARCHAR) AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_DUPRATE_ORACLE}) t",
-        f"SELECT 'wmark' AS part, n_events AS a, n_late AS b, "
-        f"p99_us AS n, CAST(p50_us AS VARCHAR) AS k, "
-        f"CAST(p95_us AS VARCHAR) AS s, CAST(max_us AS DOUBLE) AS v, "
-        f"true AS ok FROM ({_WMAUDIT_ORACLE}) t",
-        f"SELECT 'fanout' AS part, predicted_rows AS a, "
-        f"max_key_product AS b, "
-        f"n_keys_left * 1000000 + n_keys_right * 1000 + n_keys_both AS n, "
-        f"CAST(n_left AS VARCHAR) AS k, CAST(n_right AS VARCHAR) AS s, "
-        f"CAST(hot_ppm AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_FANOUT_ORACLE}) t",
-        f"SELECT 'rdv' AS part, doc_id AS a, {_NB} AS b, {_NB} AS n, "
-        f"shard AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_RENDEZVOUS_ORACLE}) t",
-        f"SELECT 'fastss' AS part, c_custkey AS a, n_neighbors AS b, "
-        f"nbr_id_sum AS n, CAST(nbr_min AS VARCHAR) AS k, "
-        f"CAST(nbr_max AS VARCHAR) AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_FASTSS_ORACLE}) t",
-        f"SELECT 'spansd' AS part, doc_id AS a, n_dup_spans AS b, "
-        f"n_kept AS n, CAST(n_spans AS VARCHAR) AS k, clean_text AS s, "
-        f"dup_span_frac AS v, true AS ok FROM ({_SPAN_DEDUP_ORACLE}) t",
-        f"SELECT 'dsir' AS part, doc_id AS a, score_scaled AS b, "
-        f"n_grams AS n, {_NS} AS k, {_NS} AS s, score AS v, true AS ok "
-        f"FROM ({_DSIR_ORACLE}) t",
-        f"SELECT 'lm' AS part, c_w1 AS a, cont AS b, c AS n, w1 AS k, "
-        f"w2 AS s, p_kn AS v, true AS ok FROM ({_BIGRAM_LM_ORACLE}) t",
-        f"SELECT 'qscore' AS part, doc_id AS a, {_NB} AS b, {_NB} AS n, "
-        f"{_NS} AS k, {_NS} AS s, score AS v, keep AS ok "
-        f"FROM ({_QCLS_ORACLE}) t",
-        f"SELECT 'markov' AS part, {_NB} AS a, {_NB} AS b, n, src AS k, "
-        f"dst AS s, p AS v, true AS ok FROM ({_MARKOV_ORACLE}) t",
-        f"SELECT 'tdiff' AS part, c_custkey AS a, {_NB} AS b, "
-        f"n_changed AS n, status AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_TDIFF_ORACLE}) t",
-        f"SELECT 'pysource' AS part, doc_id AS a, {_NB} AS b, "
-        f"n_chars AS n, source AS k, text AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_PYSOURCE_ORACLE}) t",
-        f"SELECT 'paths' AS part, {_NB} AS a, {_NB} AS b, n_keys AS n, "
-        f"{_NS} AS k, path AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_PATHS_ORACLE}) t",
-        f"SELECT 'range1h' AS part, user_id AS a, event_id AS b, "
-        f"n_1h AS n, {_NS} AS k, {_NS} AS s, vmax_1h AS v, true AS ok "
-        f"FROM ({_RANGE1H_ORACLE}) t",
-        f"SELECT 'tri' AS part, node AS a, {_NB} AS b, n_tri AS n, "
-        f"{_NS} AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_TRIANGLE_ORACLE}) t",
-        f"SELECT 'udtf' AS part, doc_id AS a, CAST(pos AS BIGINT) AS b, "
-        f"CAST(char_start AS BIGINT) AS n, {_NS} AS k, span AS s, "
-        f"{_ND} AS v, true AS ok FROM ({_UDTF_ORACLE}) t",
-        f"SELECT 'variant' AS part, event_id AS a, {_NB} AS b, "
-        f"CAST(k_val AS BIGINT) AS n, {_NS} AS k, {_NS} AS s, {_ND} AS v, "
-        f"ok FROM ({_VARIANT_ORACLE}) t",
-        f"SELECT 'mg' AS part, {_NB} AS a, {_NB} AS b, n_exact AS n, "
-        f"item AS k, {_NS} AS s, {_ND} AS v, ok FROM ({_MG_ORACLE}) t",
-        f"SELECT 'tpch' AS part, {_NB} AS a, {_NB} AS b, n, k, "
-        f"{_NS} AS s, v, true AS ok FROM ({_TPCH_SHAPES_ORACLE}) t",
-        f"SELECT 'tpch2' AS part, {_NB} AS a, {_NB} AS b, n, k, "
-        f"{_NS} AS s, v, true AS ok FROM ({_TPCH_SHAPES2_ORACLE}) t",
-        f"SELECT 'rrf' AS part, query_id AS a, id AS b, rrf_scaled AS n, "
-        f"CAST(n_lists AS VARCHAR) AS k, {_NS} AS s, "
-        f"CAST(fused_rank AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_SQL['hybrid_rrf_retrieval']}) t",
-        f"SELECT 'pipeline' AS part, doc_id AS a, n_copies AS b, "
-        f"CAST(n_ws_tokens AS BIGINT) AS n, split AS k, "
-        f"CAST(n_bpe_tokens AS VARCHAR) AS s, contamination_ratio AS v, "
-        f"true AS ok FROM ({_SQL['corpus_training_pipeline']}) t",
-        f"SELECT 'cdc2' AS part, c_custkey AS a, {_NB} AS b, {_NB} AS n, "
-        f"op AS k, c_name || '|' || c_mktsegment AS s, "
-        f"CAST(c_acctbal AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_SNAPSHOT_CDC_ORACLE}) t",
-        "SELECT 'scdlk' AS part, o_orderkey AS a, at_v AS b, "
-        "valid_from_v AS n, o_orderstatus AS k, CAST(NULL AS VARCHAR) AS s, "
-        "total AS v, true AS ok FROM ("
-        + _SCD2_LOOKUP_ORACLE.format(cdc=_CDC_SQL)
-        + ") t",
-        f"SELECT 'ppl' AS part, doc_id AS a, {_NB} AS b, n_bigrams AS n, "
-        f"{_NS} AS k, {_NS} AS s, ppl AS v, true AS ok "
-        f"FROM ({_PPL_ORACLE}) t",
-        f"SELECT 'cbkt' AS part, doc_id AS a, bucket_id AS b, "
-        f"n_bigrams AS n, lang AS k, bucket AS s, ppl AS v, true AS ok "
-        f"FROM ({_CBKT_ORACLE}) t",
-        f"SELECT 'jsd' AS part, {_NB} AS a, js_scaled AS b, {_NB} AS n, "
-        f"group_a AS k, group_b AS s, js AS v, true AS ok "
-        f"FROM ({_JSD_ORACLE}) t",
-        f"SELECT 'ppj_'||part AS part, a, b, {_NB} AS n, {_NS} AS k, "
-        f"{_NS} AS s, v, true AS ok FROM ({_PPJOIN_ORACLE}) t",
-        f"SELECT 'gsplit' AS part, doc_id AS a, group_rep AS b, "
-        f"{_NB} AS n, split AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_GSPLIT_ORACLE}) t",
-        f"SELECT part, a, b, n, k, s, v, ok FROM ({_UNIMAX_ORACLE}) t",
-        f"SELECT part, a, b, n, k, s, v, ok FROM ({_OLAP_ORACLE}) t",
-        f"SELECT part, a, b, n, k, s, v, ok FROM ({_AHASH_ORACLE}) t",
-        f"SELECT part, a, b, n, k, s, v, ok FROM ({_AUDIO_ORACLE}) t",
-        f"SELECT 'y4m' AS part, doc_id AS a, CAST(frame_idx AS BIGINT) "
-        f"AS b, y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"CAST(y_min AS VARCHAR) || ':' || CAST(y_max AS VARCHAR) AS s, "
-        f"CAST(ts_ms AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_Y4M_ORACLE}) t",
-        f"SELECT 'avi' AS part, doc_id AS a, CAST(frame_idx AS BIGINT) "
-        f"AS b, y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"CAST(y_min AS VARCHAR) || ':' || CAST(y_max AS VARCHAR) AS s, "
-        f"CAST(ts_ms AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_AVI_ORACLE}) t",
-        f"SELECT 'h264' AS part, doc_id AS a, CAST(frame_idx AS BIGINT) "
-        f"AS b, y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"CAST(y_min AS VARCHAR) || ':' || CAST(y_max AS VARCHAR) AS s, "
-        f"CAST(ts_ms AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_MP4_ORACLE}) t",
-        f"SELECT 'h264p' AS part, doc_id AS a, CAST(frame_idx AS BIGINT) "
-        f"AS b, y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"CAST(y_min AS VARCHAR) || ':' || CAST(y_max AS VARCHAR) || ':' "
-        f"|| CAST(is_key AS VARCHAR) AS s, "
-        f"CAST(ts_ms AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_MP4P_ORACLE}) t",
-        f"SELECT 'fmp4' AS part, doc_id AS a, CAST(frame_idx AS BIGINT) "
-        f"AS b, y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"CAST(y_min AS VARCHAR) || ':' || CAST(y_max AS VARCHAR) AS s, "
-        f"CAST(ts_ms AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_FMP4_ORACLE}) t",
-        f"SELECT 'g711' AS part, doc_id AS a, n_samples AS b, s_sum AS n, "
-        f"law AS k, "
-        f"CAST(s_min AS VARCHAR) || ':' || CAST(s_max AS VARCHAR) AS s, "
-        f"CAST(sample_rate AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_G711_ORACLE}) t",
-        f"SELECT part, a, b, n, {_NS} AS k, {_NS} AS s, {_ND} AS v, ok "
-        f"FROM ({_SDD_ORACLE}) t",
-        f"SELECT 'tune_' || family AS part, target_scaled AS a, "
-        f"param_id AS b, cost AS n, "
-        f"CAST(p1 AS VARCHAR) || 'x' || CAST(p2 AS VARCHAR) AS k, "
-        f"{_NS} AS s, CAST(recall_scaled AS DOUBLE) AS v, meets AS ok "
-        f"FROM ({_SQL['tune_recall_params']}) t",
-        f"SELECT 'jpeg_' || codec AS part, doc_id AS a, "
-        f"CAST(y_min AS BIGINT) AS b, "
-        f"y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"{_NS} AS s, CAST(y_max AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_JPEG_ORACLE}) t",
-        f"SELECT 'tiff' AS part, doc_id AS a, CAST(y_min AS BIGINT) AS b, "
-        f"y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"{_NS} AS s, CAST(y_max AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_TIFF_ORACLE}) t",
-        f"SELECT 'gif' AS part, doc_id AS a, CAST(y_min AS BIGINT) AS b, "
-        f"y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"{_NS} AS s, CAST(y_max AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_GIF_ORACLE}) t",
-        f"SELECT 'thumb' AS part, doc_id AS a, CAST(y_min AS BIGINT) AS b, "
-        f"y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"{_NS} AS s, CAST(y_max AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_THUMB_ORACLE}) t",
-        f"SELECT 'xfmt_'||part AS part, a, b, n, {_NS} AS k, {_NS} AS s, "
-        f"{_ND} AS v, ok FROM ({_XFMT_ORACLE}) t",
-        f"SELECT 'kcore' AS part, node AS a, deg AS b, {_NB} AS n, "
-        f"{_NS} AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_kcore_oracle()}) t",
-        f"SELECT 'lpa' AS part, node AS a, lab AS b, {_NB} AS n, "
-        f"{_NS} AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_lpa_oracle()}) t",
-        f"SELECT 'contain' AS part, id_a AS a, id_b AS b, shared AS n, "
-        f"CAST(n_a AS VARCHAR) AS k, CAST(n_b AS VARCHAR) AS s, "
-        f"containment AS v, true AS ok FROM ({_CONTAIN_ORACLE}) t",
-        f"SELECT 'ileave' AS part, doc_id AS a, interleave_key AS b, "
-        f"pos AS n, lang AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_ILEAVE_ORACLE}) t",
-        f"SELECT 'gopher' AS part, doc_id AS a, n_words AS b, "
-        f"sum_word_len AS n, keep AS k, rule_bits AS s, "
-        f"CAST(n_lines AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_GOPHER_ORACLE}) t",
-        f"SELECT 'novel' AS part, doc_id AS a, n_grams AS b, "
-        f"n_novel AS n, {_NS} AS k, {_NS} AS s, novelty AS v, "
-        f"true AS ok FROM ({_NOVEL_ORACLE}) t",
-        f"SELECT 'entropy' AS part, doc_id AS a, n_chars AS b, "
-        f"n_distinct_chars AS n, {_NS} AS k, {_NS} AS s, entropy AS v, "
-        f"true AS ok FROM ({_ENTROPY_ORACLE}) t",
-        f"SELECT 'naa_'||part AS part, {_NB} AS a, s AS b, n, "
-        f"{_NS} AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_SQL['sql_null_aware_anti']}) t",
-        f"SELECT 'preagg' AS part, {_NB} AS a, {_NB} AS b, n_rows AS n, "
-        f"n_name AS k, {_NS} AS s, sum_rev AS v, true AS ok "
-        f"FROM ({_PREAGG_ORACLE}) t",
-        f"SELECT 'exp_'||part AS part, c_custkey AS a, {_NB} AS b, "
-        f"{_NB} AS n, failed AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_EXPECT_ORACLE}) t",
-        f"SELECT 'inc_'||part AS part, a, b, n, {_NS} AS k, "
-        f"{_NS} AS s, v, true AS ok FROM ({_INC_ORACLE}) t",
-        f"SELECT 'semdedup_' || part AS part, {_NB} AS a, {_NB} AS b, "
-        f"n, {_NS} AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_SQL['dedup_semantic']}) t",
-    ]
+        branch("streak", "events_flag_streaks", a="user_id",
+               b="streak_len", n="n_events_before",
+               k="unix_micros(start_ts)", s="unix_micros(end_ts)"),
+        branch("rollmad", "timeseries_rolling_mad", a="user_id",
+               b="event_id", n="n_obs", v="roll_med + roll_mad",
+               ok="is_anomaly"),
+        branch("cusum", "timeseries_cusum", a="user_id", b="event_id",
+               n="cusum_pos", k="cusum_neg", s="alarm_neg", v="value",
+               ok="alarm_pos"),
+        branch("winnow", "text_winnow_fingerprints", a="doc_id",
+               b="fp_pos", n="fp_hash"),
+        branch("qnorm", "corpus_quantile_normalize", a="doc_id",
+               b="norm_value", n="pooled_target", k="source",
+               s="src_rank", v="n_chars"),
+        branch("sdec", "timeseries_seasonal_decompose", a="epoch_day",
+               b="y_scaled", n="n_obs * 8 + phase", k="event_type",
+               v="y + coalesce(trend, 0) + coalesce(seasonal, 0) "
+               "+ coalesce(remainder, 0)"),
+        branch("twap", "timeseries_twap", a="user_id", b="bucket",
+               n="covered_us", k="n_pieces", v="twap"),
+        branch("skew", "agg_key_skew", a="n_keys", b="max_count",
+               n="n_rows", k="top1_ppm",
+               s="CAST(p50_count AS STRING) || ':' || "
+               "CAST(p90_count AS STRING) || ':' || "
+               "CAST(p99_count AS STRING)",
+               v="gini"),
+        branch("ltrend", "timeseries_linear_trend", a="n_obs",
+               k="event_type", v="slope + intercept + r2"),
+        branch("wquant", "agg_weighted_quantiles", a="w_total",
+               k="l_returnflag", v="wq_1_2 + wq_9_10 + wq_99_100"),
+        branch("pmi", "text_pmi_collocations", a="c_xy",
+               b="c_x * 100000 + c_y", n="n_pairs", k="w1", s="w2",
+               v="pmi"),
+        branch("burst", "events_burstiness", a="user_id", b="n_gaps",
+               v="mean_gap_us + coalesce(cv2, 0) + coalesce(burstiness, 0)"),
+        branch("wau", "events_active_users", a="epoch_day", b="dau",
+               n="wau", ok="wau_within_bound"),
+        branch("ovlp", "events_audience_overlap", a="n_a", b="n_b",
+               n="n_inter * 1000000 + n_union", k="g1", s="g2",
+               ok="inter_within_bound"),
+        branch("duprate", "corpus_dup_rate", a="n_docs", b="n_distinct",
+               n="n_clones * 1000 + max_clone_count", k="source",
+               s="dup_ppm"),
+        branch("wmark", "events_watermark_audit", a="n_events",
+               b="n_late", n="p99_us", k="p50_us", s="p95_us", v="max_us"),
+        branch("fanout", "join_fanout_preflight", a="predicted_rows",
+               b="max_key_product",
+               n="n_keys_left * 1000000 + n_keys_right * 1000 "
+               "+ n_keys_both",
+               k="n_left", s="n_right", v="hot_ppm"),
+        branch("rdv", "corpus_rendezvous_shards", a="doc_id", k="shard"),
+        branch("fastss", "linkage_fastss_pairs", a="c_custkey",
+               b="n_neighbors", n="nbr_id_sum", k="nbr_min", s="nbr_max"),
+        branch("spansd", "text_span_dedup", a="doc_id", b="n_dup_spans",
+               n="n_kept", k="n_spans", s="clean_text",
+               v="dup_span_frac"),
+        branch("dsir", "text_dsir_importance", a="doc_id",
+               b="score_scaled", n="n_grams", v="score"),
+        branch("lm", "text_bigram_lm", a="c_w1", b="cont", n="c", k="w1",
+               s="w2", v="p_kn"),
+        branch("qscore", "text_quality_classifier", a="doc_id", v="score",
+               ok="keep"),
+        branch("markov", "events_markov_transitions", n="n", k="src",
+               s="dst", v="p"),
+        branch("tdiff", "etl_table_diff", a="c_custkey", n="n_changed",
+               k="status"),
+        branch("pysource", "source_python_datasource", a="doc_id",
+               n="n_chars", k="source", s="text"),
+        branch("paths", "events_session_paths", n="n_keys", s="path"),
+        branch("range1h", "window_time_range_frame", a="user_id",
+               b="event_id", n="n_1h", v="vmax_1h"),
+        branch("tri", "graph_triangle_counts", a="node", n="n_tri"),
+        branch("udtf", "udtf_token_spans", a="doc_id", b="pos",
+               n="char_start", s="span"),
+        branch("variant", "events_variant_extract", a="event_id",
+               n="k_val", ok="ok"),
+        branch("mg", "agg_heavy_hitters_mg", n="n_exact", k="item",
+               ok="ok"),
+        branch("tpch", "sql_tpch_shapes", n="n", k="k", v="v"),
+        branch("tpch2", "sql_tpch_shapes2", n="n", k="k", v="v"),
+        branch("rrf", "hybrid_rrf_retrieval", a="query_id", b="id",
+               n="rrf_scaled", k="n_lists", v="fused_rank"),
+        branch("pipeline", "corpus_training_pipeline", a="doc_id",
+               b="n_copies", n="n_ws_tokens", k="split",
+               s="n_bpe_tokens", v="contamination_ratio"),
+        # || is NULL-propagating in both engines, so a 'D' row's NULL
+        # payload stays NULL (concat_ws would collapse it to "")
+        branch("cdc2", "etl_snapshot_cdc", a="c_custkey", k="op",
+               s="c_name || '|' || c_mktsegment", v="c_acctbal"),
+        branch("scdlk", "etl_scd2_lookup", a="o_orderkey", b="at_v",
+               n="valid_from_v", k="o_orderstatus", v="total"),
+        branch("ppl", "text_lm_perplexity", a="doc_id", n="n_bigrams",
+               v="ppl"),
+        branch("cbkt", "text_ccnet_buckets", a="doc_id", b="bucket_id",
+               n="n_bigrams", k="lang", s="bucket", v="ppl"),
+        branch("jsd", "text_js_divergence", b="js_scaled", k="group_a",
+               s="group_b", v="js"),
+        branch("ppj_", "dedup_ppjoin_exact", a="a", b="b", v="v"),
+        branch("gsplit", "corpus_group_safe_split", a="doc_id",
+               b="group_rep", k="split"),
+        branch("umax_", "corpus_unimax", **_SAME),
+        branch("olap_", "sql_olap_shapes", **_SAME),
+        branch("ahash_", "multimodal_ahash_dedup", **_SAME),
+        branch("aud_", "multimodal_audio_stats", **_SAME),
+        branch("y4m", "multimodal_y4m_stats", **_FRAME),
+        branch("avi", "multimodal_avi_stats", **_FRAME),
+        branch("h264", "multimodal_mp4_stats", **_FRAME),
+        branch("h264p", "multimodal_mp4_pgop_stats",
+               **{**_FRAME, "s": _YRANGE + " || ':' || CAST(is_key AS STRING)"}),
+        branch("fmp4", "multimodal_mp4_frag_stats", **_FRAME),
+        branch("g711", "multimodal_g711_stats", a="doc_id", b="n_samples",
+               n="s_sum", k="law",
+               s="CAST(s_min AS STRING) || ':' || CAST(s_max AS STRING)",
+               v="sample_rate"),
+        branch("sdd_", "stream_incremental_dedup", part="part", a="a",
+               b="b", n="n", ok="ok"),
+        branch("tune_", "tune_recall_params", part="'tune_' || family",
+               a="target_scaled", b="param_id", n="cost",
+               k="CAST(p1 AS STRING) || 'x' || CAST(p2 AS STRING)",
+               v="recall_scaled", ok="meets"),
+        branch("jpeg_", "multimodal_jpeg_stats", part="'jpeg_' || codec",
+               **_IMAGE),
+        branch("gif", "multimodal_gif_stats", **_IMAGE),
+        branch("tiff", "multimodal_tiff_stats", **_IMAGE),
+        branch("thumb", "multimodal_thumbnail_pipeline", **_IMAGE),
+        branch("xfmt_", "multimodal_cross_format_dedup", a="a", b="b",
+               n="n", ok="ok"),
+        branch("kcore", "graph_kcore", a="node", b="deg"),
+        branch("lpa", "graph_label_propagation", a="node", b="lab"),
+        branch("contain", "dedup_containment_pairs", a="id_a", b="id_b",
+               n="shared", k="n_a", s="n_b", v="containment"),
+        branch("ileave", "corpus_interleave", a="doc_id",
+               b="interleave_key", n="pos", k="lang"),
+        branch("gopher", "text_gopher_rules", a="doc_id", b="n_words",
+               n="sum_word_len", k="keep", s="rule_bits", v="n_lines"),
+        branch("novel", "text_ngram_novelty", a="doc_id", b="n_grams",
+               n="n_novel", v="novelty"),
+        branch("entropy", "text_char_entropy", a="doc_id", b="n_chars",
+               n="n_distinct_chars", v="entropy"),
+        branch("naa_", "sql_null_aware_anti", b="s", n="n"),
+        branch("preagg", "join_preagg_pushdown", n="n_rows", k="n_name",
+               v="sum_rev"),
+        branch("exp_", "etl_expectations", a="c_custkey", k="failed"),
+        branch("inc_", "incremental_battery", a="a", b="b", n="n", v="v"),
+        branch("semdedup_", "dedup_semantic", n="n", ok="ok"),
+    ),
+    defaults={"ok": "true"},
 )
 
+# Part tag -> covering SUBSUMED constituent.  Keys ending in "_" are
+# prefix families ("jdbc_" covers jdbc_write_read, jdbc_parallel,
+# jdbc_pushdown); all other keys match exactly.  Every branch reads its
+# constituent's OWN registered oracle, so a sweep (tools/sf1_sweep.py)
+# may check each branch through its constituent instead of running
+# the monolithic 86-branch UNION oracle (~19 min of DuckDB wall at
+# sf1, round-10 measurement) — the battery itself then runs rows-only
+# at sweep scale while the 50-query contract run still hash-checks the
+# full union at sf0.01.  tests/test_oracle_parity.py pins that this map
+# stays total.
+EXTENSION_BATTERY_PARTS: dict[str, str] = _EXTENSION.parts()
 
-@register(
+register_battery(
     "extension_battery",
-    oracle=_EXT_ORACLE,
-    doc="Cross-family extension surfaces in one driver slot (see the "
-    "slot-discipline note above): jdbc_* = Derby JDBC roundtrip/"
-    "parallel-stride/pushdown (sink_jdbc_roundtrip), js_* = bucketed "
-    "zero-Exchange and skew-salted joins (join_scale_battery), bm25 = "
-    "BM25 lexical scoring (text_bm25_scores), ts_* = EWMA + "
-    "grid-resample interpolation (timeseries_battery), lk_* = blocked "
-    "record linkage pairs + transitive clusters (linkage_battery), "
-    "cos = exact brute-force cosine top-k (sim_cosine_topk), "
-    "segdedup = corpus-frequency boilerplate removal "
-    "(text_segment_dedup), cms_* = count–min sketch buckets + "
-    "min-over-rows point estimates checked against exact frequencies "
-    "(agg_count_min), spansd = exact-substring span dedup — "
-    "duplicated k-token passages trimmed everywhere but their "
-    "canonical owner (text_span_dedup), dsir = DSIR hashed-n-gram "
-    "importance weights against the lang='en' target corpus "
-    "(text_dsir_importance), lm = Kneser–Ney bigram LM "
-    "statistics "
-    "(text_bigram_lm), qscore = sparse linear quality classifier "
-    "(text_quality_classifier), markov = user-journey transition "
-    "matrix (events_markov_transitions), tdiff = snapshot "
-    "reconciliation (etl_table_diff), pysource = Spark 4 Python "
-    "DataSource with plan-time filter pushdown "
-    "(source_python_datasource), paths = journey-path frequencies "
-    "(events_session_paths), range1h = trailing-1h RANGE window frame "
-    "(window_time_range_frame), tri = degree-ordered triangle counting "
-    "(graph_triangle_counts), udtf = Python UDTF token spans via "
-    "LATERAL (udtf_token_spans), variant = VariantType semi-structured "
-    "extraction (events_variant_extract), mg = Misra–Gries heavy "
-    "hitters as an invariant (agg_heavy_hitters_mg), tpch = the "
-    "Q4/Q10/Q14/Q18/Q19/Q20/Q21 warehouse shapes (sql_tpch_shapes), "
-    "tpch2 = the remaining eleven shapes completing all 22 "
-    "(sql_tpch_shapes2: Q2/Q6/Q7/Q8/Q9/Q11/Q12/Q13/Q15/Q16/Q22), "
-    "rrf = reciprocal-rank-fusion hybrid retrieval over BM25 + cosine "
-    "rank lists with an exact-integer score (hybrid_rrf_retrieval), "
-    "pipeline = the LLM-data pipeline end-to-end — quality gate → "
-    "exact dedup → decontamination → md5 split → token budgeting, the "
-    "COMPOSITION hash-checked in one row (corpus_training_pipeline), "
-    "cdc2 = "
-    "snapshot-diff CDC generation (etl_snapshot_cdc), scdlk = "
-    "point-in-time SCD2 dimension lookup (etl_scd2_lookup), ppl = "
-    "corpus-LM pseudo-perplexity scoring (text_lm_perplexity), "
-    "cbkt = CCNet per-language perplexity terciles via distributed "
-    "rank arithmetic (text_ccnet_buckets), jsd = pairwise "
-    "Jensen–Shannon divergence between per-source hashed token "
-    "distributions (text_js_divergence), "
-    "ppj_* = exact prefix-filtered set-similarity pairs + their "
-    "connected-component groups vs a brute-force + recursive-CTE "
-    "oracle (dedup_ppjoin_exact), gsplit = leakage-safe train/val/"
-    "test assignment keyed on the near-dup component representative "
-    "(corpus_group_safe_split), umax_* = UNIMAX water-filling budget "
-    "allocation + materialized per-epoch copies (corpus_unimax), "
-    "olap_* = window-over-aggregate report idioms: ratio-to-report, "
-    "year-over-year delta, Pareto cumulative share with an exact "
-    "integer-scaled 80%% cut (sql_olap_shapes).  Shared "
-    "schema (part, a, b, n, k, s, v, ok) with NULL padding typed "
-    "identically on both sides; each branch keeps its own ok pins "
-    "(JDBC stride partitioning, pushdown into Derby's WHERE, "
-    "zero-Exchange bucketed plan, _salt in join keys, classifier "
-    "keep flags).",
+    _EXTENSION,
+    doc="Cross-family extension surfaces in one registry slot (see the "
+    "slot-discipline note above), one branch per constituent over the "
+    "shared schema (part, a, b, n, k, s, v, ok) with NULL padding typed "
+    "identically on both sides; each branch keeps its own ok pins and "
+    "each constituent's own doc describes its branch.  Branches "
+    "(part tag = constituent; a tag* is a family of tags): "
+    + ", ".join(
+        f"{key}{'*' if key.endswith('_') else ''} = {name}"
+        for key, name in EXTENSION_BATTERY_PARTS.items()
+    )
+    + ".",
 )
-def extension_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def _nb() -> Column:
-        return F.lit(None).cast("long")
-
-    def _ns() -> Column:
-        return F.lit(None).cast("string")
-
-    def _nd() -> Column:
-        return F.lit(None).cast("double")
-
-    jdbc = _FN["sink_jdbc_roundtrip"](spark, sf_dir).select(
-        F.concat(F.lit("jdbc_"), F.col("part")).alias("part"),
-        F.col("c_custkey").cast("long").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        F.col("c_mktsegment").alias("k"),
-        F.col("c_name").alias("s"),
-        F.col("c_acctbal").cast("double").alias("v"),
-        "ok",
-    )
-    js = _FN["join_scale_battery"](spark, sf_dir).select(
-        F.concat(F.lit("js_"), F.col("part")).alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n").cast("long").alias("n"),
-        F.col("k"),
-        _ns().alias("s"),
-        F.col("v").cast("double").alias("v"),
-        "ok",
-    )
-    bm = _FN["text_bm25_scores"](spark, sf_dir).select(
-        F.lit("bm25").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("bm25").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ts = _FN["timeseries_battery"](spark, sf_dir).select(
-        F.concat(F.lit("ts_"), F.col("part")).alias("part"),
-        F.col("uid").cast("long").alias("a"),
-        F.col("t").cast("long").alias("b"),
-        F.col("n").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("v").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    lk = _FN["linkage_battery"](spark, sf_dir).select(
-        F.concat(F.lit("lk_"), F.col("part")).alias("part"),
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        F.col("d").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    cos = _FN["sim_cosine_topk"](spark, sf_dir).select(
-        F.lit("cos").alias("part"),
-        F.col("query_id").cast("long").alias("a"),
-        F.col("neighbor_id").cast("long").alias("b"),
-        F.col("rank").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    seg = text_segment_dedup(spark, sf_dir).select(
-        F.lit("segdedup").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        F.col("n_kept").cast("long").alias("n"),
-        _ns().alias("k"),
-        F.col("clean_text").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    cms = agg_count_min(spark, sf_dir).select(
-        F.concat(F.lit("cms_"), F.col("part")).alias("part"),
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        F.col("n").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    blm = agg_bloom_membership(spark, sf_dir).select(
-        F.concat(F.lit("bf_"), F.col("part")).alias("part"),
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        F.col("n").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    mba = agg_market_basket(spark, sf_dir).select(
-        F.lit("mba").alias("part"),
-        F.col("item_a").cast("long").alias("a"),
-        F.col("item_b").cast("long").alias("b"),
-        F.col("c_ab").alias("n"),
-        F.col("c_a").cast("string").alias("k"),
-        F.col("c_b").cast("string").alias("s"),
-        F.col("confidence").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ksd = agg_ks_drift(spark, sf_dir).select(
-        F.lit("ks").alias("part"),
-        F.col("n_a").cast("long").alias("a"),
-        F.col("n_b").cast("long").alias("b"),
-        F.col("d_scaled").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("at_v").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    chi = agg_chi_square(spark, sf_dir).select(
-        F.lit("chi2").alias("part"),
-        F.col("observed").alias("a"),
-        F.col("n_a").alias("b"),
-        F.col("n_b").alias("n"),
-        F.col("a").cast("string").alias("k"),
-        F.col("b").cast("string").alias("s"),
-        F.col("contrib").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    voc = text_vocab_profile(spark, sf_dir).select(
-        F.lit("vocab").alias("part"),
-        F.col("n_tokens").alias("a"),
-        F.col("n_types").alias("b"),
-        F.col("n_hapax").alias("n"),
-        F.col("source").alias("k"),
-        F.col("n_docs").cast("string").alias("s"),
-        F.col("ttr").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ben = agg_benford_audit(spark, sf_dir).select(
-        F.lit("benford").alias("part"),
-        F.col("digit").cast("long").alias("a"),
-        F.col("n").alias("b"),
-        F.col("n_total").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("dev").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    stk = events_flag_streaks(spark, sf_dir).select(
-        F.lit("streak").alias("part"),
-        F.col("user_id").cast("long").alias("a"),
-        F.col("streak_len").alias("b"),
-        F.col("n_events_before").alias("n"),
-        F.unix_micros("start_ts").cast("string").alias("k"),
-        F.unix_micros("end_ts").cast("string").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    rmd = timeseries_rolling_mad(spark, sf_dir).select(
-        F.lit("rollmad").alias("part"),
-        F.col("user_id").cast("long").alias("a"),
-        F.col("event_id").cast("long").alias("b"),
-        F.col("n_obs").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        (F.col("roll_med") + F.col("roll_mad")).alias("v"),
-        F.col("is_anomaly").alias("ok"),
-    )
-    fss = linkage_fastss_pairs(spark, sf_dir).select(
-        F.lit("fastss").alias("part"),
-        F.col("c_custkey").alias("a"),
-        F.col("n_neighbors").alias("b"),
-        F.col("nbr_id_sum").alias("n"),
-        F.col("nbr_min").cast("string").alias("k"),
-        F.col("nbr_max").cast("string").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    rdv = corpus_rendezvous_shards(spark, sf_dir).select(
-        F.lit("rdv").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        F.col("shard").alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    fan = join_fanout_preflight(spark, sf_dir).select(
-        F.lit("fanout").alias("part"),
-        F.col("predicted_rows").alias("a"),
-        F.col("max_key_product").alias("b"),
-        (
-            F.col("n_keys_left") * 1000000
-            + F.col("n_keys_right") * 1000
-            + F.col("n_keys_both")
-        ).alias("n"),
-        F.col("n_left").cast("string").alias("k"),
-        F.col("n_right").cast("string").alias("s"),
-        F.col("hot_ppm").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    wmk = events_watermark_audit(spark, sf_dir).select(
-        F.lit("wmark").alias("part"),
-        F.col("n_events").alias("a"),
-        F.col("n_late").alias("b"),
-        F.col("p99_us").alias("n"),
-        F.col("p50_us").cast("string").alias("k"),
-        F.col("p95_us").cast("string").alias("s"),
-        F.col("max_us").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    dpr = corpus_dup_rate(spark, sf_dir).select(
-        F.lit("duprate").alias("part"),
-        F.col("n_docs").alias("a"),
-        F.col("n_distinct").alias("b"),
-        (F.col("n_clones") * 1000 + F.col("max_clone_count")).alias("n"),
-        F.col("source").alias("k"),
-        F.col("dup_ppm").cast("string").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ovl = events_audience_overlap(spark, sf_dir).select(
-        F.lit("ovlp").alias("part"),
-        F.col("n_a").alias("a"),
-        F.col("n_b").alias("b"),
-        (F.col("n_inter") * 1000000 + F.col("n_union")).alias("n"),
-        F.col("g1").alias("k"),
-        F.col("g2").alias("s"),
-        _nd().alias("v"),
-        F.col("inter_within_bound").alias("ok"),
-    )
-    wau = events_active_users(spark, sf_dir).select(
-        F.lit("wau").alias("part"),
-        F.col("epoch_day").alias("a"),
-        F.col("dau").alias("b"),
-        F.col("wau").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.col("wau_within_bound").alias("ok"),
-    )
-    bst = events_burstiness(spark, sf_dir).select(
-        F.lit("burst").alias("part"),
-        F.col("user_id").cast("long").alias("a"),
-        F.col("n_gaps").alias("b"),
-        _nb().alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        (
-            F.col("mean_gap_us")
-            + F.coalesce(F.col("cv2"), F.lit(0.0))
-            + F.coalesce(F.col("burstiness"), F.lit(0.0))
-        ).alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    pmi = text_pmi_collocations(spark, sf_dir).select(
-        F.lit("pmi").alias("part"),
-        F.col("c_xy").alias("a"),
-        (F.col("c_x") * 100000 + F.col("c_y")).alias("b"),
-        F.col("n_pairs").alias("n"),
-        F.col("w1").alias("k"),
-        F.col("w2").alias("s"),
-        F.col("pmi").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    wqt = agg_weighted_quantiles(spark, sf_dir).select(
-        F.lit("wquant").alias("part"),
-        F.col("w_total").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        F.col("l_returnflag").alias("k"),
-        _ns().alias("s"),
-        (
-            F.col("wq_1_2") + F.col("wq_9_10") + F.col("wq_99_100")
-        ).alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ltr = timeseries_linear_trend(spark, sf_dir).select(
-        F.lit("ltrend").alias("part"),
-        F.col("n_obs").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        F.col("event_type").alias("k"),
-        _ns().alias("s"),
-        (F.col("slope") + F.col("intercept") + F.col("r2")).alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    skw = agg_key_skew(spark, sf_dir).select(
-        F.lit("skew").alias("part"),
-        F.col("n_keys").alias("a"),
-        F.col("max_count").alias("b"),
-        F.col("n_rows").alias("n"),
-        F.col("top1_ppm").cast("string").alias("k"),
-        F.concat(
-            F.col("p50_count").cast("string"),
-            F.lit(":"),
-            F.col("p90_count").cast("string"),
-            F.lit(":"),
-            F.col("p99_count").cast("string"),
-        ).alias("s"),
-        F.col("gini").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    twp = timeseries_twap(spark, sf_dir).select(
-        F.lit("twap").alias("part"),
-        F.col("user_id").cast("long").alias("a"),
-        F.col("bucket").alias("b"),
-        F.col("covered_us").alias("n"),
-        F.col("n_pieces").cast("string").alias("k"),
-        _ns().alias("s"),
-        F.col("twap").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    sdc = timeseries_seasonal_decompose(spark, sf_dir).select(
-        F.lit("sdec").alias("part"),
-        F.col("epoch_day").alias("a"),
-        F.col("y_scaled").alias("b"),
-        (F.col("n_obs") * 8 + F.col("phase")).alias("n"),
-        F.col("event_type").alias("k"),
-        _ns().alias("s"),
-        (
-            F.col("y")
-            + F.coalesce(F.col("trend"), F.lit(0.0))
-            + F.coalesce(F.col("seasonal"), F.lit(0.0))
-            + F.coalesce(F.col("remainder"), F.lit(0.0))
-        ).alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    qnm = corpus_quantile_normalize(spark, sf_dir).select(
-        F.lit("qnorm").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("norm_value").cast("long").alias("b"),
-        F.col("pooled_target").alias("n"),
-        F.col("source").alias("k"),
-        F.col("src_rank").cast("string").alias("s"),
-        F.col("n_chars").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    wnw = text_winnow_fingerprints(spark, sf_dir).select(
-        F.lit("winnow").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("fp_pos").alias("b"),
-        F.col("fp_hash").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    csm = timeseries_cusum(spark, sf_dir).select(
-        F.lit("cusum").alias("part"),
-        F.col("user_id").cast("long").alias("a"),
-        F.col("event_id").cast("long").alias("b"),
-        F.col("cusum_pos").alias("n"),
-        F.col("cusum_neg").cast("string").alias("k"),
-        F.col("alarm_neg").cast("string").alias("s"),
-        F.col("value").alias("v"),
-        F.col("alarm_pos").alias("ok"),
-    )
-    spn = text_span_dedup(spark, sf_dir).select(
-        F.lit("spansd").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_dup_spans").cast("long").alias("b"),
-        F.col("n_kept").cast("long").alias("n"),
-        F.col("n_spans").cast("string").alias("k"),
-        F.col("clean_text").alias("s"),
-        F.col("dup_span_frac").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    dsir = text_dsir_importance(spark, sf_dir).select(
-        F.lit("dsir").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("score_scaled").cast("long").alias("b"),
-        F.col("n_grams").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("score").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    lm = text_bigram_lm(spark, sf_dir).select(
-        F.lit("lm").alias("part"),
-        F.col("c_w1").cast("long").alias("a"),
-        F.col("cont").cast("long").alias("b"),
-        F.col("c").cast("long").alias("n"),
-        F.col("w1").alias("k"),
-        F.col("w2").alias("s"),
-        F.col("p_kn").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    qc = text_quality_classifier(spark, sf_dir).select(
-        F.lit("qscore").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("score").cast("double").alias("v"),
-        F.col("keep").alias("ok"),
-    )
-    mk = events_markov_transitions(spark, sf_dir).select(
-        F.lit("markov").alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n").cast("long").alias("n"),
-        F.col("src").alias("k"),
-        F.col("dst").alias("s"),
-        F.col("p").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    td = etl_table_diff(spark, sf_dir).select(
-        F.lit("tdiff").alias("part"),
-        F.col("c_custkey").cast("long").alias("a"),
-        _nb().alias("b"),
-        F.col("n_changed").cast("long").alias("n"),
-        F.col("status").alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    py = source_python_datasource(spark, sf_dir).select(
-        F.lit("pysource").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        F.col("n_chars").cast("long").alias("n"),
-        F.col("source").alias("k"),
-        F.col("text").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    pa = events_session_paths(spark, sf_dir).select(
-        F.lit("paths").alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n_keys").cast("long").alias("n"),
-        _ns().alias("k"),
-        F.col("path").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    rg = window_time_range_frame(spark, sf_dir).select(
-        F.lit("range1h").alias("part"),
-        F.col("user_id").cast("long").alias("a"),
-        F.col("event_id").cast("long").alias("b"),
-        F.col("n_1h").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("vmax_1h").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    tr = graph_triangle_counts(spark, sf_dir).select(
-        F.lit("tri").alias("part"),
-        F.col("node").cast("long").alias("a"),
-        _nb().alias("b"),
-        F.col("n_tri").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ut = udtf_token_spans(spark, sf_dir).select(
-        F.lit("udtf").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("pos").cast("long").alias("b"),
-        F.col("char_start").cast("long").alias("n"),
-        _ns().alias("k"),
-        F.col("span").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    va = events_variant_extract(spark, sf_dir).select(
-        F.lit("variant").alias("part"),
-        F.col("event_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        F.col("k_val").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.col("ok"),
-    )
-    mg = agg_heavy_hitters_mg(spark, sf_dir).select(
-        F.lit("mg").alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n_exact").cast("long").alias("n"),
-        F.col("item").alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.col("ok"),
-    )
-    tp = sql_tpch_shapes(spark, sf_dir).select(
-        F.lit("tpch").alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n").cast("long").alias("n"),
-        F.col("k"),
-        _ns().alias("s"),
-        F.col("v").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    tp2 = sql_tpch_shapes2(spark, sf_dir).select(
-        F.lit("tpch2").alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n").cast("long").alias("n"),
-        F.col("k"),
-        _ns().alias("s"),
-        F.col("v").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    rrf = _FN["hybrid_rrf_retrieval"](spark, sf_dir).select(
-        F.lit("rrf").alias("part"),
-        F.col("query_id").cast("long").alias("a"),
-        F.col("id").cast("long").alias("b"),
-        F.col("rrf_scaled").cast("long").alias("n"),
-        F.col("n_lists").cast("string").alias("k"),
-        _ns().alias("s"),
-        F.col("fused_rank").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    pipe = _FN["corpus_training_pipeline"](spark, sf_dir).select(
-        F.lit("pipeline").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_copies").cast("long").alias("b"),
-        F.col("n_ws_tokens").cast("long").alias("n"),
-        F.col("split").alias("k"),
-        F.col("n_bpe_tokens").cast("string").alias("s"),
-        F.col("contamination_ratio").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    c2 = etl_snapshot_cdc(spark, sf_dir).select(
-        F.lit("cdc2").alias("part"),
-        F.col("c_custkey").cast("long").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        F.col("op").alias("k"),
-        # concat (not concat_ws): NULL-propagating like SQL ||, so 'D'
-        # rows' NULL payload stays NULL instead of collapsing to ""
-        F.concat(F.col("c_name"), F.lit("|"), F.col("c_mktsegment")).alias(
-            "s"
-        ),
-        F.col("c_acctbal").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    sl = etl_scd2_lookup(spark, sf_dir).select(
-        F.lit("scdlk").alias("part"),
-        F.col("o_orderkey").cast("long").alias("a"),
-        F.col("at_v").cast("long").alias("b"),
-        F.col("valid_from_v").cast("long").alias("n"),
-        F.col("o_orderstatus").alias("k"),
-        _ns().alias("s"),
-        F.col("total").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    pl = text_lm_perplexity(spark, sf_dir).select(
-        F.lit("ppl").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        F.col("n_bigrams").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("ppl").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    cbk = text_ccnet_buckets(spark, sf_dir).select(
-        F.lit("cbkt").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("bucket_id").cast("long").alias("b"),
-        F.col("n_bigrams").cast("long").alias("n"),
-        F.col("lang").alias("k"),
-        F.col("bucket").alias("s"),
-        F.col("ppl").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    jsd = text_js_divergence(spark, sf_dir).select(
-        F.lit("jsd").alias("part"),
-        _nb().alias("a"),
-        F.col("js_scaled").cast("long").alias("b"),
-        _nb().alias("n"),
-        F.col("group_a").alias("k"),
-        F.col("group_b").alias("s"),
-        F.col("js").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    pj = dedup_ppjoin_exact(spark, sf_dir).select(
-        F.concat(F.lit("ppj_"), F.col("part")).alias("part"),
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        _nb().alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("v").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    gsp = corpus_group_safe_split(spark, sf_dir).select(
-        F.lit("gsplit").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("group_rep").cast("long").alias("b"),
-        _nb().alias("n"),
-        F.col("split").alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    umx = corpus_unimax(spark, sf_dir)
-    olp = sql_olap_shapes(spark, sf_dir)
-    ahd = multimodal_ahash_dedup(spark, sf_dir)
-    aud = multimodal_audio_stats(spark, sf_dir)
-    xf = multimodal_cross_format_dedup(spark, sf_dir).select(
-        F.concat(F.lit("xfmt_"), F.col("part")).alias("part"),
-        F.col("a"),
-        F.col("b"),
-        F.col("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.col("ok"),
-    )
-    thm = multimodal_thumbnail_pipeline(spark, sf_dir).select(
-        F.lit("thumb").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("y_min").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        _ns().alias("s"),
-        F.col("y_max").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    gifs = multimodal_gif_stats(spark, sf_dir).select(
-        F.lit("gif").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("y_min").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        _ns().alias("s"),
-        F.col("y_max").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    tif = multimodal_tiff_stats(spark, sf_dir).select(
-        F.lit("tiff").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("y_min").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        _ns().alias("s"),
-        F.col("y_max").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    jpg = multimodal_jpeg_stats(spark, sf_dir).select(
-        F.concat(F.lit("jpeg_"), F.col("codec")).alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("y_min").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        _ns().alias("s"),
-        F.col("y_max").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    y4m = multimodal_y4m_stats(spark, sf_dir).select(
-        F.lit("y4m").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("frame_idx").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        F.concat(
-            F.col("y_min").cast("string"),
-            F.lit(":"),
-            F.col("y_max").cast("string"),
-        ).alias("s"),
-        F.col("ts_ms").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    tune = _FN["tune_recall_params"](spark, sf_dir).select(
-        F.concat(F.lit("tune_"), F.col("family")).alias("part"),
-        F.col("target_scaled").cast("long").alias("a"),
-        F.col("param_id").cast("long").alias("b"),
-        F.col("cost").cast("long").alias("n"),
-        F.concat(
-            F.col("p1").cast("string"), F.lit("x"), F.col("p2").cast("string")
-        ).alias("k"),
-        _ns().alias("s"),
-        F.col("recall_scaled").cast("double").alias("v"),
-        F.col("meets").alias("ok"),
-    )
-    avi = multimodal_avi_stats(spark, sf_dir).select(
-        F.lit("avi").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("frame_idx").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        F.concat(
-            F.col("y_min").cast("string"),
-            F.lit(":"),
-            F.col("y_max").cast("string"),
-        ).alias("s"),
-        F.col("ts_ms").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    mp4s = multimodal_mp4_stats(spark, sf_dir).select(
-        F.lit("h264").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("frame_idx").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        F.concat(
-            F.col("y_min").cast("string"),
-            F.lit(":"),
-            F.col("y_max").cast("string"),
-        ).alias("s"),
-        F.col("ts_ms").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    mp4p = multimodal_mp4_pgop_stats(spark, sf_dir).select(
-        F.lit("h264p").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("frame_idx").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        F.concat(
-            F.col("y_min").cast("string"),
-            F.lit(":"),
-            F.col("y_max").cast("string"),
-            F.lit(":"),
-            F.col("is_key").cast("string"),
-        ).alias("s"),
-        F.col("ts_ms").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    fmp4 = multimodal_mp4_frag_stats(spark, sf_dir).select(
-        F.lit("fmp4").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("frame_idx").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        F.concat(
-            F.col("y_min").cast("string"),
-            F.lit(":"),
-            F.col("y_max").cast("string"),
-        ).alias("s"),
-        F.col("ts_ms").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    g711 = multimodal_g711_stats(spark, sf_dir).select(
-        F.lit("g711").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_samples").cast("long").alias("b"),
-        F.col("s_sum").cast("long").alias("n"),
-        F.col("law").alias("k"),
-        F.concat(
-            F.col("s_min").cast("string"),
-            F.lit(":"),
-            F.col("s_max").cast("string"),
-        ).alias("s"),
-        F.col("sample_rate").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    sdd = stream_incremental_dedup(spark, sf_dir).select(
-        F.col("part"),
-        F.col("a").cast("long"),
-        F.col("b").cast("long"),
-        F.col("n").cast("long"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.lit(None).cast("double").alias("v"),
-        F.col("ok"),
-    )
-    nov = text_ngram_novelty(spark, sf_dir).select(
-        F.lit("novel").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_grams").cast("long").alias("b"),
-        F.col("n_novel").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("novelty").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ent = text_char_entropy(spark, sf_dir).select(
-        F.lit("entropy").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_chars").cast("long").alias("b"),
-        F.col("n_distinct_chars").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("entropy").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    gop = text_gopher_rules(spark, sf_dir).select(
-        F.lit("gopher").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_words").alias("b"),
-        F.col("sum_word_len").alias("n"),
-        F.col("keep").alias("k"),
-        F.col("rule_bits").alias("s"),
-        F.col("n_lines").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ilv = corpus_interleave(spark, sf_dir).select(
-        F.lit("ileave").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("interleave_key").alias("b"),
-        F.col("pos").alias("n"),
-        F.col("lang").alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    cnt2 = dedup_containment_pairs(spark, sf_dir).select(
-        F.lit("contain").alias("part"),
-        F.col("id_a").cast("long").alias("a"),
-        F.col("id_b").cast("long").alias("b"),
-        F.col("shared").alias("n"),
-        F.col("n_a").cast("string").alias("k"),
-        F.col("n_b").cast("string").alias("s"),
-        F.col("containment").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    kcr = graph_kcore(spark, sf_dir).select(
-        F.lit("kcore").alias("part"),
-        F.col("node").alias("a"),
-        F.col("deg").alias("b"),
-        _nb().alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    lpa = graph_label_propagation(spark, sf_dir).select(
-        F.lit("lpa").alias("part"),
-        F.col("node").alias("a"),
-        F.col("lab").alias("b"),
-        _nb().alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    pre = join_preagg_pushdown(spark, sf_dir).select(
-        F.lit("preagg").alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n_rows").cast("long").alias("n"),
-        F.col("n_name").alias("k"),
-        _ns().alias("s"),
-        F.col("sum_rev").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    inc = incremental_battery(spark, sf_dir).select(
-        F.concat(F.lit("inc_"), F.col("part")).alias("part"),
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        F.col("n").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("v").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    sem = _FN["dedup_semantic"](spark, sf_dir).select(
-        F.concat(F.lit("semdedup_"), F.col("part")).alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.col("ok"),
-    )
-    exp = etl_expectations(spark, sf_dir).select(
-        F.concat(F.lit("exp_"), F.col("part")).alias("part"),
-        F.col("c_custkey").cast("long").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        F.col("failed").alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    naa = _FN["sql_null_aware_anti"](spark, sf_dir).select(
-        F.concat(F.lit("naa_"), F.col("part")).alias("part"),
-        _nb().alias("a"),
-        F.col("s").cast("long").alias("b"),
-        F.col("n").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    return (
-        jdbc.unionByName(js)
-        .unionByName(bm)
-        .unionByName(ts)
-        .unionByName(lk)
-        .unionByName(cos)
-        .unionByName(seg)
-        .unionByName(cms)
-        .unionByName(blm)
-        .unionByName(mba)
-        .unionByName(ksd)
-        .unionByName(chi)
-        .unionByName(voc)
-        .unionByName(ben)
-        .unionByName(stk)
-        .unionByName(rmd)
-        .unionByName(csm)
-        .unionByName(wnw)
-        .unionByName(qnm)
-        .unionByName(sdc)
-        .unionByName(twp)
-        .unionByName(skw)
-        .unionByName(ltr)
-        .unionByName(wqt)
-        .unionByName(pmi)
-        .unionByName(bst)
-        .unionByName(wau)
-        .unionByName(ovl)
-        .unionByName(dpr)
-        .unionByName(wmk)
-        .unionByName(fan)
-        .unionByName(rdv)
-        .unionByName(fss)
-        .unionByName(spn)
-        .unionByName(dsir)
-        .unionByName(lm)
-        .unionByName(qc)
-        .unionByName(mk)
-        .unionByName(td)
-        .unionByName(py)
-        .unionByName(pa)
-        .unionByName(rg)
-        .unionByName(tr)
-        .unionByName(ut)
-        .unionByName(va)
-        .unionByName(mg)
-        .unionByName(tp)
-        .unionByName(tp2)
-        .unionByName(rrf)
-        .unionByName(pipe)
-        .unionByName(c2)
-        .unionByName(sl)
-        .unionByName(pl)
-        .unionByName(cbk)
-        .unionByName(jsd)
-        .unionByName(pj)
-        .unionByName(gsp)
-        .unionByName(umx)
-        .unionByName(olp)
-        .unionByName(ahd)
-        .unionByName(aud)
-        .unionByName(y4m)
-        .unionByName(avi)
-        .unionByName(mp4s)
-        .unionByName(mp4p)
-        .unionByName(fmp4)
-        .unionByName(g711)
-        .unionByName(sdd)
-        .unionByName(tune)
-        .unionByName(jpg)
-        .unionByName(gifs)
-        .unionByName(tif)
-        .unionByName(thm)
-        .unionByName(xf)
-        .unionByName(kcr)
-        .unionByName(lpa)
-        .unionByName(cnt2)
-        .unionByName(ilv)
-        .unionByName(gop)
-        .unionByName(nov)
-        .unionByName(ent)
-        .unionByName(naa)
-        .unionByName(pre)
-        .unionByName(exp)
-        .unionByName(inc)
-        .unionByName(sem)
-    )
-
-
-# Part-tag -> covering SUBSUMED constituent for extension_battery.  Keys
-# ending in "_" are prefix families ("jdbc_" covers jdbc_write_read,
-# jdbc_parallel, jdbc_pushdown); all other keys match exactly.  Every
-# constituent named here carries its OWN DuckDB oracle over the same
-# branch values, so a sweep (tools/sf1_sweep.py) may check each branch
-# independently instead of running the monolithic ~60-branch UNION
-# oracle (~19 min of DuckDB wall at sf1, round-10 measurement) — the
-# battery itself then runs rows-only at sweep scale while the driver
-# still hash-checks the full union at sf0.01.
-# tests/test_oracle_parity.py pins that this map stays total: every
-# part the battery emits resolves here, and every constituent it names
-# is registered with a non-None oracle.
-EXTENSION_BATTERY_PARTS: dict[str, str] = {
-    "jdbc_": "sink_jdbc_roundtrip",
-    "js_": "join_scale_battery",
-    "bm25": "text_bm25_scores",
-    "ts_": "timeseries_battery",
-    "lk_": "linkage_battery",
-    "cos": "sim_cosine_topk",
-    "segdedup": "text_segment_dedup",
-    "cms_": "agg_count_min",
-    "bf_": "agg_bloom_membership",
-    "mba": "agg_market_basket",
-    "ks": "agg_ks_drift",
-    "chi2": "agg_chi_square",
-    "vocab": "text_vocab_profile",
-    "benford": "agg_benford_audit",
-    "streak": "events_flag_streaks",
-    "rollmad": "timeseries_rolling_mad",
-    "cusum": "timeseries_cusum",
-    "winnow": "text_winnow_fingerprints",
-    "qnorm": "corpus_quantile_normalize",
-    "sdec": "timeseries_seasonal_decompose",
-    "twap": "timeseries_twap",
-    "skew": "agg_key_skew",
-    "ltrend": "timeseries_linear_trend",
-    "wquant": "agg_weighted_quantiles",
-    "pmi": "text_pmi_collocations",
-    "burst": "events_burstiness",
-    "wau": "events_active_users",
-    "ovlp": "events_audience_overlap",
-    "duprate": "corpus_dup_rate",
-    "wmark": "events_watermark_audit",
-    "fanout": "join_fanout_preflight",
-    "rdv": "corpus_rendezvous_shards",
-    "fastss": "linkage_fastss_pairs",
-    "spansd": "text_span_dedup",
-    "dsir": "text_dsir_importance",
-    "lm": "text_bigram_lm",
-    "qscore": "text_quality_classifier",
-    "markov": "events_markov_transitions",
-    "tdiff": "etl_table_diff",
-    "pysource": "source_python_datasource",
-    "paths": "events_session_paths",
-    "range1h": "window_time_range_frame",
-    "tri": "graph_triangle_counts",
-    "udtf": "udtf_token_spans",
-    "variant": "events_variant_extract",
-    "mg": "agg_heavy_hitters_mg",
-    "tpch": "sql_tpch_shapes",
-    "tpch2": "sql_tpch_shapes2",
-    "rrf": "hybrid_rrf_retrieval",
-    "pipeline": "corpus_training_pipeline",
-    "cdc2": "etl_snapshot_cdc",
-    "scdlk": "etl_scd2_lookup",
-    "ppl": "text_lm_perplexity",
-    "cbkt": "text_ccnet_buckets",
-    "jsd": "text_js_divergence",
-    "ppj_": "dedup_ppjoin_exact",
-    "gsplit": "corpus_group_safe_split",
-    "umax_": "corpus_unimax",
-    "olap_": "sql_olap_shapes",
-    "ahash_": "multimodal_ahash_dedup",
-    "aud_": "multimodal_audio_stats",
-    "y4m": "multimodal_y4m_stats",
-    "avi": "multimodal_avi_stats",
-    "h264": "multimodal_mp4_stats",
-    "h264p": "multimodal_mp4_pgop_stats",
-    "fmp4": "multimodal_mp4_frag_stats",
-    "g711": "multimodal_g711_stats",
-    "sdd_": "stream_incremental_dedup",
-    "tune_": "tune_recall_params",
-    "jpeg_": "multimodal_jpeg_stats",
-    "gif": "multimodal_gif_stats",
-    "tiff": "multimodal_tiff_stats",
-    "thumb": "multimodal_thumbnail_pipeline",
-    "xfmt_": "multimodal_cross_format_dedup",
-    "kcore": "graph_kcore",
-    "lpa": "graph_label_propagation",
-    "contain": "dedup_containment_pairs",
-    "ileave": "corpus_interleave",
-    "gopher": "text_gopher_rules",
-    "novel": "text_ngram_novelty",
-    "entropy": "text_char_entropy",
-    "naa_": "sql_null_aware_anti",
-    "preagg": "join_preagg_pushdown",
-    "exp_": "etl_expectations",
-    "inc_": "incremental_battery",
-    "semdedup_": "dedup_semantic",
-}
 
 
 def resolve_battery_part(part: str, parts_map: dict[str, str]) -> str | None:
@@ -10575,178 +8883,6 @@ subsume(
     # iterative BPE trainer: rows-only by design (python-dual tested)
     "text_bpe_merges",
 )
-
-
-# ---------------------------------------------------------------------------
-# Streaming incremental near-dup dedup (round 13): the continuously-
-# ingesting-corpus composition of the txn sink and the MinHash probe.
-# ---------------------------------------------------------------------------
-
-
-
-@register(
-    "stream_incremental_dedup",
-    oracle=_SDD_ORACLE,
-    doc="Streaming incremental near-dup dedup (round 13 — streaming/"
-    "jobs.py::stream_near_dup_ingest): the continuously-ingesting-"
-    "corpus composition of two verified pieces — per microbatch, the "
-    "incoming docs are shingled/signed/banded ONCE, probed against the "
-    "ACCUMULATED index txn tables for cross-batch duplicates (work ∝ "
-    "batch + matched buckets, never corpus) and against themselves for "
-    "within-batch pairs, then dup pairs and index rows append under "
-    "app_txn idempotence (sources/txn.py) so every pair is recorded "
-    "EXACTLY ONCE across restarts/replays.  Fixture: distinct-text "
-    "shingleable reps stream in 3 microbatches (sequential availableNow "
-    "deliveries — the stream_fbmerge_check pattern), then a 4th batch "
-    "plants EXACT twins (id + 300000, the guarded _twin_id offset) of "
-    "every 13th rep.  Identical text => identical signature => same "
-    "bucket in every band, so each twin MUST surface with jaccard "
-    "exactly 1.0 (the dedup_incremental_probe containment guarantee, "
-    "now across the streaming boundary): part=sdd_planted pins each "
-    "expected (rep, twin) pair's presence per-row; sdd_containment "
-    "pins found == planted; sdd_restart REPLAYS every batch against a "
-    "fresh checkpoint and pins the dups table unchanged (the exactly-"
-    "once half); sdd_bounds pins every emitted pair inside "
-    "[threshold, 1].  Hash-seed-dependent natural near-dup pairs stay "
-    "engine-side (they ride the table but not the oracle), and the "
-    "runtime path (restarts, drop-mode chains) is pinned in "
-    "tests/test_streaming.py.",
-)
-def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from ..operators.dedup import collapse_exact_first
-    from ..operators.pinning import eager_pin
-    from ..sources.txn import txn_read
-    from ..streaming.jobs import stream_near_dup_ingest
-    from .llm_data import _twin_id
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    shingleable = F.col("text").rlike(r"(^| )\S+ \S+ \S+")
-    base = eager_pin(
-        collapse_exact_first(docs, "text", "doc_id").where(shingleable)
-    )
-    planted = eager_pin(base.where(F.col("doc_id") % 13 == 0))
-    twins = planted.select(
-        _twin_id(F.col("doc_id")).alias("doc_id"), "text"
-    )
-
-    scratch = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".tmp"
-    )
-    os.makedirs(scratch, exist_ok=True)
-    work = tempfile.mkdtemp(prefix="sdd_", dir=scratch)
-    try:
-        src = os.path.join(work, "src")
-        index_dir = os.path.join(work, "idx")
-
-        def run(ckpt: str) -> None:
-            # maxFilesPerTrigger=1: a FRESH-checkpoint replay must
-            # re-deliver the same four per-file microbatches (ids 0-3),
-            # exercising every app_txn no-op — without it the replay
-            # collapses into one batch and only id 0's idempotence is
-            # checked (round-13 review finding)
-            stream = (
-                spark.readStream.schema(base.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            q = (
-                stream_near_dup_ingest(
-                    stream, index_dir, ckpt, app_id="sdd",
-                    index_duplicates=True,
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        ckpt = os.path.join(work, "ckpt")
-        # three deliveries + one twin delivery, each its own microbatch
-        for kk in range(3):
-            base.where(F.col("doc_id") % 3 == kk).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            run(ckpt)
-        twins.coalesce(1).write.mode("append").parquet(src)
-        run(ckpt)
-        dups1 = eager_pin(txn_read(spark, os.path.join(index_dir, "dups")))
-        # FULL replay against a fresh checkpoint: every append must be
-        # an app_txn no-op — the dups table byte-identical
-        run(os.path.join(work, "ckpt2"))
-        dups2 = eager_pin(txn_read(spark, os.path.join(index_dir, "dups")))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-    exact1 = dups1.where(F.col("jaccard") == 1.0).select(
-        "new_id", "existing_id"
-    )
-    planted_rows = planted.select(
-        F.lit("sdd_planted").alias("part"),
-        F.col("doc_id").alias("a"),
-        (F.col("doc_id") + 300000).alias("b"),
-        F.lit(None).cast("bigint").alias("n"),
-    ).join(
-        exact1.select(
-            F.col("existing_id").alias("a"), F.col("new_id").alias("b")
-        ).withColumn("ok", F.lit(True)),
-        ["a", "b"],
-        "left",
-    ).select("part", "a", "b", "n", F.coalesce("ok", F.lit(False)).alias("ok"))
-    nulls = [
-        F.lit(None).cast("bigint").alias("a"),
-        F.lit(None).cast("bigint").alias("b"),
-    ]
-    n_found = planted.select(
-        F.col("doc_id").alias("a"),
-        (F.col("doc_id") + 300000).alias("b"),
-    ).join(
-        exact1.select(
-            F.col("existing_id").alias("a"), F.col("new_id").alias("b")
-        ),
-        ["a", "b"],
-        "left_semi",
-    ).agg(F.count("*").alias("h"))
-    containment = (
-        planted.agg(F.count("*").cast("bigint").alias("t"))
-        .crossJoin(F.broadcast(n_found))
-        .select(
-            F.lit("sdd_containment").alias("part"),
-            *nulls,
-            F.col("t").alias("n"),
-            (F.col("h") == F.col("t")).alias("ok"),
-        )
-    )
-    unchanged = (
-        dups1.exceptAll(dups2).isEmpty()
-        and dups2.exceptAll(dups1).isEmpty()
-    )
-    restart = planted.agg(F.count("*").cast("bigint").alias("n")).select(
-        F.lit("sdd_restart").alias("part"),
-        *nulls,
-        "n",
-        F.lit(bool(unchanged)).alias("ok"),
-    )
-    bounds = dups1.agg(
-        F.coalesce(
-            F.min(
-                (F.col("jaccard") >= 0.5) & (F.col("jaccard") <= 1.0)
-            ),
-            F.lit(True),
-        ).alias("ok")
-    ).select(
-        F.lit("sdd_bounds").alias("part"),
-        *nulls,
-        F.lit(None).cast("bigint").alias("n"),
-        "ok",
-    )
-    return (
-        planted_rows.unionByName(containment)
-        .unionByName(restart)
-        .unionByName(bounds)
-    )
 
 
 # round-13: streaming incremental near-dup, riding extension_battery

@@ -50,13 +50,35 @@ def test_rows_only_runs(spark, name):
     assert len(df.schema.fields) > 0
 
 
-def test_extension_battery_shard_map_constituents_oracle_backed():
+# Source types (DuckDB DESCRIBE, precision dropped) each declared slot
+# type takes without changing a value: a DOUBLE in an integer slot
+# rounds in DuckDB but truncates in Spark, and a float or timestamp in
+# a STRING slot formats differently in the two engines.
+_INTS = {"TINYINT", "SMALLINT", "INTEGER", "BIGINT", "HUGEINT"}
+_FITS = {
+    "BIGINT": _INTS,
+    "INTEGER": _INTS,
+    "DOUBLE": _INTS | {"FLOAT", "DOUBLE", "DECIMAL", "BOOLEAN"},
+    "STRING": _INTS | {"VARCHAR", "BOOLEAN"},
+    "BOOLEAN": {"BOOLEAN"},
+    "TIMESTAMP": {"TIMESTAMP", "DATE"},
+}
+
+
+def test_extension_battery_shard_map_constituents_oracle_backed(duck):
     """The sf1 sweep shards extension_battery's oracle into constituent
     oracles (tools/sf1_sweep.py).  The cheap registry-side half of the
     soundness contract runs in the DEFAULT tier: every constituent the
     map names must be registered with a non-None oracle — otherwise
-    sharding would silently drop hash coverage for that branch."""
+    sharding would silently drop hash coverage for that branch.
+
+    Every spec-generated battery is also type-checked by DuckDB DESCRIBE,
+    which plans the oracle without running it: the generated oracle
+    must come out in exactly the declared slot types, and each branch's
+    uncast slot expression must fit its slot (see _FITS) — a mismatch
+    that would otherwise surface only as a hash failure."""
     from imdb_top_250_etl_pipeline_spark.plans import SHARDED_BATTERIES
+    from imdb_top_250_etl_pipeline_spark.plans.batteries import BATTERY_SPECS
 
     for part_key, cname in SHARDED_BATTERIES["extension_battery"].items():
         assert cname in ALL, f"{part_key!r} -> unregistered {cname!r}"
@@ -64,6 +86,22 @@ def test_extension_battery_shard_map_constituents_oracle_backed():
             f"{part_key!r} -> {cname!r} has no oracle; sharding would "
             "drop hash coverage for that branch"
         )
+
+    for name, spec in BATTERY_SPECS.items():
+        declared = [(s, "VARCHAR" if t == "STRING" else t) for s, t in spec.slots()]
+        described = duck.execute(f"DESCRIBE {spec.oracle()}").fetchall()
+        assert [tuple(r[:2]) for r in described] == declared, name
+        for b in spec.branches:
+            exprs = spec.exprs(b)
+            raw = duck.execute(
+                f"DESCRIBE {spec.branch_oracle(b, cast=False)}"
+            ).fetchall()
+            for (slot, typ), row in zip(spec.slots(), raw):
+                src_type = row[1].split("(")[0]
+                assert exprs[slot] == "NULL" or src_type in _FITS[typ], (
+                    f"{name} part={b.key}: {slot} = {exprs[slot]!r} is "
+                    f"{row[1]}, which does not fit {typ}"
+                )
 
 
 @pytest.mark.slow

@@ -199,7 +199,7 @@ def main() -> None:
         run_query(name, BUDGET)
 
     # one automatic retry pass for budget timeouts at 4x: a legitimately
-    # expensive oracle (extension_battery's ~60-branch UNION needs ~19
+    # expensive oracle (extension_battery's 86-branch UNION needs ~19
     # min at sf1) then lands green in the SAME artifact, while a true
     # blowup still gets recorded as a timeout instead of hanging the
     # sweep (round-10 lesson: the first full run needed a manual
